@@ -6,11 +6,14 @@ Usage, from the root of a checkout:
         --seconds S --trace {0,1}
 
 One run starts a local[<cores>] session, materializes the workload's
-seeded inputs (set-up), repeats the workload's op until it stops
-speeding up (warm-up, part of set-up), then times ops in a closed loop,
-one client, until S seconds of op time have passed. With ``--trace 1``
-a second window of S seconds follows with Spark's event log attached
-and a job group around every call; its figures are the per-layer ones.
+seeded inputs (set-up), runs the workload's fixed number of warm-up ops
+(part of set-up), then times ops in a closed loop, one client, until S
+seconds of op time have passed and at least the workload's minimum
+number of ops has run. With ``--trace 1`` each op is followed by a
+traced one, with Spark's event log attached and a job group around
+every call; the traced ops' figures are the per-layer ones. Every op's
+outputs are checked, warm-up ops included; ``attempted`` and
+``failed`` count them.
 
 The last line of standard output is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}`` with the end-to-end
@@ -84,13 +87,11 @@ OTHER_LAYER = [
     ("local_query.decode_frac", "fraction"),
     ("refresh.segments", "count"),
     ("refresh.bytes_written_postings", "bytes"),
-    ("check.tie_order_diffs", "count"),
     ("setup.session_s", "s"),
     ("setup.inputs_s", "s"),
     ("setup.prebuild_s", "s"),
     ("setup.oracle_s", "s"),
     ("setup.warmup_s", "s"),
-    ("setup.warmup_ops", "count"),
     ("host.steal_frac", "fraction"),
     ("host.calib_ms", "ms"),
     ("trace.overhead_s", "s"),
@@ -105,14 +106,17 @@ def per_layer_metrics() -> list[tuple[str, str]]:
     return out + OTHER_LAYER
 
 
-# Warm-up ends at the first op that is less than WARMUP_GAIN faster than
-# the op before it. Measured on 4 cores, the op after the cold one is
-# 30-45% faster on `build` and 12-22% faster on `refresh` (whose set-up
-# build already warmed most code paths); later ops gain a few percent
-# each. 25% splits the two, so the warm-up length does not flip between
-# runs.
-WARMUP_MAX = 2
-WARMUP_GAIN = 0.25
+# Ops run per run before measuring, and the fewest measured per run.
+# On 4 cores the second `build` op is 30-45% faster than the cold one,
+# the third 5-20% and the fourth 0-15% faster again; the second
+# `refresh` op is about 25% faster than the first, later ones a few
+# percent. With one measured `build` op per run, sets of ten runs
+# spread by 0.1-0.8 of their median, against 0.05-0.11 for `refresh`'s
+# median of three. The run budget allows about four ops per run, so one warm-up op
+# drops the cold op, and the median of three mostly picks the third or
+# the fourth.
+WARMUP_OPS = 1
+MIN_OPS = 3
 
 
 def _run_op(workload, tracer, tag):
@@ -125,47 +129,11 @@ def _run_op(workload, tracer, tag):
     calls: dict[str, float] = {}
     for _, name, wall in res.spans:
         calls[name] = calls.get(name, 0.0) + wall
+    if res.error:
+        print(res.error, file=sys.stderr)
     print(f"op {tag}: {res.wall:.3f} s " + " ".join(f"{k}={v:.3f}" for k, v in calls.items())
           + (" FAILED" if res.failed else ""), file=sys.stderr)
     return res
-
-
-def _warm_up(workload, tracer):
-    """Repeat the op until it stops speeding up. Returns the warm-up walls
-    and the op that ended warm-up: one less than ``WARMUP_GAIN`` faster
-    than the op before it is already warm, so it becomes the first
-    measured op instead of being run again. A failed op also ends
-    warm-up and is returned, so it is reported as a failure."""
-    walls = []
-    while len(walls) < WARMUP_MAX:
-        res = _run_op(workload, tracer, f"w{len(walls)}")
-        if res.failed:
-            return walls, res
-        if walls and res.wall >= (1 - WARMUP_GAIN) * walls[-1]:
-            return walls, res
-        walls.append(res.wall)
-    return walls, None
-
-
-def _window(workload, tracer, seconds, tag, results):
-    """Closed loop, one client: the next op starts when the last ends,
-    until ``seconds`` of op time have passed (at least one op, at most
-    the workload's ``max_ops_per_window``)."""
-    spent = sum(r.wall for r in results)
-    while (
-        (not results or spent < seconds)
-        and len(results) < workload.max_ops_per_window
-        and workload.has_input()
-    ):
-        if results and results[-1].failed:
-            break
-        res = _run_op(workload, tracer, f"{tag}{len(results)}")
-        results.append(res)
-        spent += res.wall
-    for res in results:
-        if res.error:
-            print(res.error, file=sys.stderr)
-    return results
 
 
 def _median(values, default=0.0):
@@ -173,7 +141,7 @@ def _median(values, default=0.0):
 
 
 def _call_figures(results, groups):
-    """Per-call figures of the traced window: per op, the sum over the
+    """Per-call figures of the traced ops: per op, the sum over the
     call's spans; then the median over ops."""
     names = FULL_CALLS + LIGHT_CALLS
     per_op = []
@@ -288,35 +256,40 @@ def _bench(args, work) -> int:
         parts = {"session_s": time.perf_counter() - t_setup}
         tracer = Tracer(spark, log_dir)
         ctx = Ctx(spark, work, args.seed, args.scale, cpus)
-        windows = 2 if args.trace else 1
-        if args.workload == "build":
-            workload = Build(ctx)
-        else:
-            workload = Refresh(ctx, WARMUP_MAX + windows * Refresh.max_ops_per_window)
+        workload = (Build if args.workload == "build" else Refresh)(ctx)
         parts.update(workload.setup())
 
         t_warm = time.perf_counter()
-        warm, first = _warm_up(workload, tracer)
-        parts["warmup_s"] = sum(warm)
-        parts["warmup_ops"] = len(warm)
-        setup_s = t_warm - t_setup + parts["warmup_s"]
+        warm = [_run_op(workload, tracer, f"w{i}") for i in range(WARMUP_OPS)]
+        parts["warmup_s"] = time.perf_counter() - t_warm
+        setup_s = time.perf_counter() - t_setup
+        print("set-up: " + " ".join(f"{k}={v:.3f}" for k, v in parts.items()), file=sys.stderr)
 
+        # Closed loop, one client: the next op starts when the last ends,
+        # until `seconds` of untraced op time have passed and at least
+        # MIN_OPS ops have run. Every op starts from the same state, so
+        # a failed op does not end the window. With tracing, a traced op
+        # follows each untraced one, so both sets see the same warm-up.
         host.calibrate(spark)
-        untraced = _window(workload, tracer, args.seconds, "u", [first] if first else [])
-        traced = []
-        if args.trace and not any(r.failed for r in untraced):
-            tracer.attach()
-            traced = _window(workload, tracer, args.seconds, "t", [])
-            tracer.detach()
+        untraced, traced = [], []
+        while len(untraced) < MIN_OPS or sum(r.wall for r in untraced) < args.seconds:
+            untraced.append(_run_op(workload, tracer, f"u{len(untraced)}"))
+            if args.trace:
+                tracer.attach()
+                traced.append(_run_op(workload, tracer, f"t{len(traced)}"))
+                tracer.detach()
         host.calibrate(spark)
     finally:
         _stop(spark)
 
-    measured = untraced + traced
-    failed = sum(1 for r in measured if r.failed)
-    for r in measured:
+    checked = warm + untraced + traced
+    failed = sum(1 for r in checked if r.failed)
+    for r in checked:
         for msg in r.problems[:10]:
             print(f"check failed: {msg}", file=sys.stderr)
+    # an op that raised has no complete timing; one that failed a check has
+    untraced = [r for r in untraced if not r.error]
+    traced = [r for r in traced if not r.error]
 
     e2e = {
         "setup_s": setup_s,
@@ -341,20 +314,18 @@ def _bench(args, work) -> int:
         shown = {n: (e2e[n], units[n]) for n in units}
 
     print(f"workload={args.workload} seed={args.seed} trace={args.trace} "
-          f"ops={len(measured)} (untraced {len(untraced)}, traced {len(traced)}) "
-          f"failed={failed} fail_frac={failed / max(1, len(measured)):.3f} "
+          f"ops={len(checked)} (warm-up {len(warm)}, timed untraced {len(untraced)}, "
+          f"timed traced {len(traced)}) failed={failed} "
+          f"fail_frac={failed / len(checked):.3f} "
           f"host.steal_frac={host.steal_frac():.3f} "
           f"host.calib_ms={_median(host.calib_ms):.1f}")
     n_ops = len(traced) if args.trace else len(untraced)
     for name, (value, unit) in shown.items():
         n = 1 if name.startswith("setup") else n_ops
         print(f"  {name:42s} {value:16.6g} {unit:10s} n={n}")
-    if not measured:
-        print("no op was measured", file=sys.stderr)
-        return 1
     print(json.dumps({
         "correct": failed == 0,
-        "attempted": len(measured),
+        "attempted": len(checked),
         "failed": failed,
         "metrics": {n: {"value": v, "unit": units[n]} for n, (v, _) in shown.items()},
     }))

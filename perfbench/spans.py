@@ -3,9 +3,9 @@
 Tracing uses Spark's own event log. The session starts with
 ``spark.eventLog.enabled`` pointing into the run's work directory, and
 the event logger is detached from the listener bus straight away, so
-set-up, warm-up and the untraced window write nothing. ``attach`` puts
-it back for the traced window; every call the benchmark makes there
-runs under its own job group. After ``spark.stop()`` has closed the log,
+set-up, warm-up and the untraced ops write nothing. ``attach`` puts it
+back for each traced op; every call the benchmark makes there runs
+under its own job group. After ``spark.stop()`` has closed the log,
 ``fold`` sums ``SparkListenerTaskEnd`` metrics and the Python SQL
 metrics per job group.
 

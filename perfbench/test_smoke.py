@@ -3,7 +3,7 @@
 Both workloads, untraced and traced: every metric BENCHMARK.json names
 is printed with its unit, no op fails, and the traced calls reconcile
 with the op wall. Also checks that the benchmark refuses to run without
-the engine next to it. Two to four minutes on 4 cores:
+the engine next to it. About five minutes on 4 cores:
 
     python3 -m pytest perfbench/test_smoke.py -q
 """

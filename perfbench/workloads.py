@@ -4,10 +4,10 @@
            index, run both near-duplicate passes over the same documents,
            then warm the fresh index and answer a stream of driver-local
            queries against it.
-``refresh`` writes beside reads on one index: each op fetches the next
-           delta snapshot through change data capture, merges it,
-           tombstones a few live documents and answers two query batches
-           (collected-terms and shuffle-join) on a cold handle.
+``refresh`` writes beside reads on one index: each op fetches a delta
+           snapshot through change data capture, merges it onto the base
+           index, tombstones a few live documents and answers two query
+           batches (collected-terms and shuffle-join) on a cold handle.
 
 README.md in this directory says why these two and which layer figure
 should move which end-to-end figure. Every op is a sequence of timed
@@ -29,11 +29,13 @@ from dataclasses import dataclass, field
 import numpy as np
 
 # Input sizes at scale 1.0. At this size a warm build takes a few
-# seconds, mostly per-job fixed cost, and one run of either workload
-# (fresh JVM, set-up, warm-up, one window) stays under a minute.
+# seconds, about 80% of it per-job fixed cost (README.md), and one run
+# of either workload (fresh JVM, set-up, warm-up, one window) takes
+# about a minute.
 BUILD_DOCS = 3000
 REFRESH_BASE_DOCS = 3000
 DELTA_DOCS = 300
+N_DELTAS = 3  # delta snapshots; ops cycle through them
 DELETES_PER_OP = 3
 SERVE_QUERIES = 30  # two periods of reference_queries (5 query kinds x 3 k values)
 BATCH_COLLECT = 50
@@ -127,38 +129,27 @@ def _postings_digest(path: str) -> str:
     return hashlib.sha256(sink.getvalue().to_pybytes()).hexdigest()
 
 
-# Two oracle scores this close are one tie. The engine sums a document's
-# per-term contributions in an order that depends on which posting list
-# reached it first, so documents with equal statistics can differ in
-# the last bit and swap places; that is counted, not failed.
-TIE_REL = 1e-12
-
-
 def _compare_ranked(label, got, ranked, k, exclude, res) -> None:
-    """Rank identity with the oracle. ``ranked`` is the oracle's full
-    ranking (doc_id, score); documents in ``exclude`` are tombstoned.
-    Rank i of ``got`` must hold a document whose oracle score ties the
-    oracle's rank-i score (so the top-k set and order agree up to exact
-    ties) and whose engine score is within rel 1e-9 of its oracle score,
-    the tolerance tests/test_rank_identity.py uses. Positions where tied
-    documents come in another order are added to ``check.tie_order_diffs``."""
+    """Rank identity with the oracle, as tests/test_rank_identity.py
+    checks it. ``ranked`` is the oracle's full ranking (doc_id, score) in
+    score-desc, doc_id-asc order; documents in ``exclude`` are
+    tombstoned. The engine's top-k doc_ids must be exactly the oracle's
+    first k live ones, in the same order, and each engine score must be
+    within rel 1e-9 of the oracle's."""
     expect = [(d, s) for d, s in ranked if d not in exclude][:k]
-    score = dict(ranked)
-    if len(got) != len(expect) or len({d for d, _ in got}) != len(got):
-        res.problems.append(f"{label}: {len(got)} results, oracle has {len(expect)}")
+    got_ids, want_ids = [d for d, _ in got], [d for d, _ in expect]
+    if got_ids != want_ids:
+        i = next((i for i, (g, w) in enumerate(zip(got_ids, want_ids)) if g != w),
+                 min(len(got_ids), len(want_ids)))
+        res.problems.append(
+            f"{label}: doc_ids differ from the oracle's from rank {i + 1}: "
+            f"{got[i:i + 2]} vs {expect[i:i + 2]}"
+        )
         return
-    for i, ((d, s), (e_doc, e_score)) in enumerate(zip(got, expect)):
-        if d in exclude:
-            res.problems.append(f"{label}: tombstoned doc {d} returned")
+    for (d, s), (_, e_score) in zip(got, expect):
+        if not math.isclose(s, e_score, rel_tol=1e-9):
+            res.problems.append(f"{label}: doc {d} score {s!r} != oracle {e_score!r}")
             return
-        if not math.isclose(score.get(d, -1.0), e_score, rel_tol=TIE_REL):
-            res.problems.append(f"{label}: rank {i + 1} is {(d, s)}, oracle has {(e_doc, e_score)}")
-            return
-        if not math.isclose(s, score[d], rel_tol=1e-9):
-            res.problems.append(f"{label}: doc {d} score {s!r} != oracle {score[d]!r}")
-            return
-        if d != e_doc:
-            res.figures["check.tie_order_diffs"] = res.figures.get("check.tie_order_diffs", 0) + 1
 
 
 def _corpus_rows(df):
@@ -167,8 +158,6 @@ def _corpus_rows(df):
 
 class Build:
     """Full snapshot cycle over the pinned base snapshot."""
-
-    max_ops_per_window = math.inf
 
     def __init__(self, ctx: Ctx):
         self.ctx = ctx
@@ -194,9 +183,6 @@ class Build:
         self.expect = [oracle.bm25_topk(terms, len(oracle.counts)) for _, terms, _ in self.queries]
         t2 = time.perf_counter()
         return {"inputs_s": t1 - t0, "oracle_s": t2 - t1}
-
-    def has_input(self) -> bool:
-        return True
 
     def op(self, rec: Recorder) -> None:
         from pyspark.sql import functions as F
@@ -261,7 +247,6 @@ class Build:
                 res.problems.append(f"{key} {ids[key]!r} differs from first op {want!r}")
         if manifest["n_docs"] != self.n_docs:
             res.problems.append(f"n_docs {manifest['n_docs']} != {self.n_docs}")
-        res.figures["check.tie_order_diffs"] = 0
         for (qid, _, k), got, ranked in zip(self.queries, answers, self.expect):
             _compare_ranked(f"local q{qid}", got, ranked, k, set(), res)
 
@@ -283,17 +268,13 @@ class Build:
 
 
 class Refresh:
-    """Incremental maintenance beside cold-handle batch queries."""
+    """Incremental maintenance beside cold-handle batch queries. Every op
+    starts from the same base index, so all ops measure the same state."""
 
-    # Each op consumes one pre-written delta snapshot, and set-up writes
-    # only as many as warm-up and the windows can use.
-    max_ops_per_window = 1
-
-    def __init__(self, ctx: Ctx, n_deltas: int):
+    def __init__(self, ctx: Ctx):
         self.ctx = ctx
         self.n_base = ctx.size(REFRESH_BASE_DOCS, 200)
         self.n_delta = ctx.size(DELTA_DOCS, 20)
-        self.n_deltas = n_deltas
         self.table = os.path.join(ctx.work, "table")
         self.ops = 0
 
@@ -307,7 +288,7 @@ class Refresh:
 
         spark, ctx = self.ctx.spark, self.ctx
         t0 = time.perf_counter()
-        total = self.n_base + self.n_deltas * self.n_delta
+        total = self.n_base + N_DELTAS * self.n_delta
         # synth_corpus names document i "src/m*/f{i}.ext": the base
         # snapshot holds i < n_base, delta j the next n_delta indexes
         full = synth_corpus(spark, total, seed=ctx.seed, partitions=ctx.cpus).withColumn(
@@ -316,7 +297,7 @@ class Refresh:
         rows = with_doc_id(full).select("doc_id", "content", "_i").collect()
         self.snapshots = []
         bounds = [0, self.n_base] + [
-            self.n_base + (j + 1) * self.n_delta for j in range(self.n_deltas)
+            self.n_base + (j + 1) * self.n_delta for j in range(N_DELTAS)
         ]
         for lo, hi in zip(bounds, bounds[1:]):
             part = full.filter((F.col("_i") >= lo) & (F.col("_i") < hi)).drop("_i")
@@ -332,41 +313,57 @@ class Refresh:
         df, fp = catalog.load_corpus(
             spark, self.table, fmt="iceberg", snapshot_id=self.snapshots[0]
         )
-        base = os.path.join(ctx.work, "idx", "s0")
-        manifest = build_index(with_doc_id(df), base, n_shards=ctx.n_shards, source_snapshot=fp)
-        self.current = base
-        self.postings = manifest["metrics"]["postings_emitted"]
+        self.base = os.path.join(ctx.work, "idx", "base")
+        manifest = build_index(with_doc_id(df), self.base, n_shards=ctx.n_shards,
+                               source_snapshot=fp)
+        self.base_postings = manifest["metrics"]["postings_emitted"]
         t2 = time.perf_counter()
 
-        self.docs = dict(self.texts[0])
-        self.pinned_avgdl = OracleIndex(self.docs).avgdl
-        self.deleted: set[int] = set()
+        self.pinned_avgdl = OracleIndex(self.texts[0]).avgdl
         self.rng = np.random.default_rng([ctx.seed, 1])
         self.q_collect = reference_queries(BATCH_COLLECT, seed=ctx.seed + 2)
         self.q_join = reference_queries(BATCH_JOIN, seed=ctx.seed + 3)
         self.q_collect_df = _query_df(spark, self.q_collect)
         self.q_join_df = _query_df(spark, self.q_join)
+        self.rankings: dict[int, dict] = {}
         t3 = time.perf_counter()
         return {"inputs_s": t1 - t0, "prebuild_s": t2 - t1, "oracle_s": t3 - t2}
 
-    def has_input(self) -> bool:
-        return self.ops < self.n_deltas
+    def _rankings(self, j: int, docs: dict[int, str]) -> dict:
+        """The oracle's full ranking of every query over the base plus
+        delta ``j``, computed once per delta (outside the op). Tombstoned
+        documents still count toward N and df, as in the index, and avgdl
+        is pinned to the base's, as an ``avgdl_override`` rebuild scores
+        them (tests/test_incremental.py)."""
+        from tfidf_spark.oracle import OracleIndex
+
+        if j not in self.rankings:
+            oracle = OracleIndex(docs)
+            oracle.avgdl = self.pinned_avgdl
+            self.rankings[j] = {
+                (label, qid): oracle.bm25_topk(terms, len(docs))
+                for label, queries in (("collect", self.q_collect), ("join", self.q_join))
+                for qid, terms, _ in queries
+            }
+        return self.rankings[j]
 
     def op(self, rec: Recorder) -> None:
         from tfidf_spark.index.builder import load_index
         from tfidf_spark.index.incremental import compact_index, delete_docs
         from tfidf_spark.index.query import bm25_query_index
-        from tfidf_spark.oracle import OracleIndex
         from tfidf_spark.sources import catalog
         from tfidf_spark.sources.corpus import with_doc_id
 
         spark, res = self.ctx.spark, rec.result
-        j = self.ops
+        n, j = self.ops, self.ops % N_DELTAS
         self.ops += 1
-        nxt = os.path.join(self.ctx.work, "idx", f"s{j + 1}")
-        self.docs.update(self.texts[j + 1])
-        live = sorted(set(self.docs) - self.deleted)
-        victims = [int(v) for v in self.rng.choice(live, size=DELETES_PER_OP, replace=False)]
+        # only the last op's snapshot is kept (disk); the base is shared
+        shutil.rmtree(os.path.join(self.ctx.work, "idx", f"r{n - 1}"), ignore_errors=True)
+        nxt = os.path.join(self.ctx.work, "idx", f"r{n}")
+        delta = self.texts[j + 1]
+        docs = {**self.texts[0], **delta}
+        victims = {int(v) for v in self.rng.choice(sorted(docs), size=DELETES_PER_OP,
+                                                   replace=False)}
 
         with rec.call("cdc"):
             appended, _, _ = catalog.incremental_changes(
@@ -374,31 +371,21 @@ class Refresh:
             )
             appended = with_doc_id(appended)
         with rec.call("compact"):
-            manifest = compact_index(load_index(spark, self.current), appended, nxt)
+            manifest = compact_index(load_index(spark, self.base), appended, nxt)
         with rec.call("delete"):
-            delete_docs(load_index(spark, nxt), victims)
+            delete_docs(load_index(spark, nxt), sorted(victims))
         handle = load_index(spark, nxt)
         with rec.call("batch_query"):
             got_collect = bm25_query_index(handle, self.q_collect_df).collect()
         with rec.call("batch_join"):
             got_join = bm25_query_index(handle, self.q_join_df, prune_by_collect=False).collect()
-        self.current = nxt
-        self.deleted.update(victims)
         m = manifest["metrics"]
-        self.postings += m["postings_emitted"]
 
-        if manifest["n_docs"] != len(self.docs):
-            res.problems.append(f"n_docs {manifest['n_docs']} != {len(self.docs)}")
-        if m["docs_tokenized"] != len(self.texts[j + 1]):
-            res.problems.append(f"delta docs {m['docs_tokenized']} != {len(self.texts[j + 1])}")
-        # Reference: the pure-Python oracle over every document of the
-        # snapshot (tombstoned ones still count toward N and df, as in the
-        # index) with avgdl pinned to the base, as an avgdl_override
-        # rebuild would score them; tombstoned ids are then filtered out
-        # and the top-k refilled.
-        oracle = OracleIndex(self.docs)
-        oracle.avgdl = self.pinned_avgdl
-        res.figures["check.tie_order_diffs"] = 0
+        if manifest["n_docs"] != len(docs):
+            res.problems.append(f"n_docs {manifest['n_docs']} != {len(docs)}")
+        if m["docs_tokenized"] != len(delta):
+            res.problems.append(f"delta docs {m['docs_tokenized']} != {len(delta)}")
+        rankings = self._rankings(j, docs)
         for label, queries, rows in (
             ("collect", self.q_collect, got_collect),
             ("join", self.q_join, got_join),
@@ -406,11 +393,10 @@ class Refresh:
             by_q: dict[int, list] = {}
             for r in rows:
                 by_q.setdefault(int(r["query_id"]), []).append(r)
-            for qid, terms, k in queries:
+            for qid, _, k in queries:
                 got = [(int(r["doc_id"]), float(r["score"]))
                        for r in sorted(by_q.get(qid, []), key=lambda r: r["rank"])]
-                ranked = oracle.bm25_topk(terms, len(self.docs))
-                _compare_ranked(f"{label} q{qid}", got, ranked, k, self.deleted, res)
+                _compare_ranked(f"{label} q{qid}", got, rankings[label, qid], k, victims, res)
 
         segments = manifest["segments"]["term_postings"]
         on_disk = sum(_dir_bytes(os.path.normpath(os.path.join(nxt, s))) for s in segments)
@@ -418,7 +404,7 @@ class Refresh:
             "docs_per_s": m["docs_tokenized"] / rec.total("cdc", "compact"),
             "query_ms": 1000 * rec.total("batch_query", "batch_join")
             / (len(self.q_collect) + len(self.q_join)),
-            "bytes_per_posting": on_disk / self.postings,
+            "bytes_per_posting": on_disk / (self.base_postings + m["postings_emitted"]),
             "refresh.segments": len(segments),
             "refresh.bytes_written_postings": m["bytes_written_postings"],
         })
