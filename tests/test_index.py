@@ -180,37 +180,6 @@ def test_determinism_across_shard_counts(spark, tiny_corpus, tmp_path):
     assert results[0] == results[1]
 
 
-def test_combine_shuffle_is_byte_identical(spark, tmp_path):
-    """The map-side combiner encode path (build_index(combine_shuffle=
-    True) — packed per-(term, shard) partials shuffled instead of posting
-    rows) must produce byte-identical compressed runs and an identical
-    manifest to the default row-shuffle path: flipping the flag is a
-    physical-plan choice only (the cluster-network knob)."""
-    import hashlib
-
-    from tfidf_spark.sources.corpus import synth_corpus, with_doc_id
-
-    corpus = with_doc_id(synth_corpus(spark, 150, partitions=4))
-    a_dir, b_dir = str(tmp_path / "row"), str(tmp_path / "comb")
-    ma = build_index(corpus, a_dir, n_shards=4, combine_shuffle=False)
-    mb = build_index(corpus, b_dir, n_shards=4, combine_shuffle=True)
-
-    def blobs(path):
-        idx = load_index(spark, path)
-        return sorted(
-            (
-                r["term"], r["shard"], r["df_shard"],
-                hashlib.sha256(bytes(r["postings"])).hexdigest(),
-                hashlib.sha256(bytes(r["weights"])).hexdigest(),
-                tuple(r["block_last"]), tuple(r["block_off"]),
-            )
-            for r in idx.term_postings.collect()
-        )
-
-    assert blobs(a_dir) == blobs(b_dir)
-    assert (ma["n_docs"], ma["avgdl"]) == (mb["n_docs"], mb["avgdl"])
-
-
 def test_warm_serving_path_identical_and_cached(spark, tiny_corpus, tiny_index):
     """IndexHandle.warm pins term_postings/term_stats in executor memory
     and loads the coordinator-resident term->df dictionary; every query

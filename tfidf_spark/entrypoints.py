@@ -162,7 +162,8 @@ def q_bm25_topk(spark, sf_dir):
         ],
     ).collect()[0]
     n = int(st["n_docs"])
-    # same double as corpus_stats' F.avg(dl): long sum cast to double / n
+    # same double as corpus_stats' F.avg(dl) while dl_sum < 2^53 (long
+    # sum cast to double / n); past that the two roundings may differ
     avgdl = float(st["dl_sum"] or 0) / n if n else 0.0
     # df-default-1 on miss via NULL -> idf_expr's coalesce (identical
     # expression to the r7 join output, so the doubles are bit-identical)

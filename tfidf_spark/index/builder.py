@@ -211,143 +211,6 @@ def _encode_sorted_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
         yield _encode_groups(pend, np.array([0]), len(pend))
 
 
-def _pack_partials_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Map-side combiner for the encode shuffle: per Arrow batch, sort by
-    (term, shard, doc_id) and pack each (term, shard) group's postings
-    into two binary columns (raw int64 ids + float64 weights, LE).
-
-    Why: the encode shuffle otherwise ships one ROW PER POSTING, each
-    carrying the term STRING plus ~25B of row overhead — ~40B/posting of
-    network for 16B of payload. Packed partials ship the term once per
-    (batch x term x shard) and the payload as two blobs: for
-    Zipf-distributed corpora the hot terms (most of the postings)
-    collapse to a few rows per batch, and the tail is never worse than
-    the row form. On a real cluster this is a ~2-3x shuffle-byte saving,
-    which at 10^12 files IS the build's network cost.
-
-    MEASURED LOCALLY (400k docs, pinned 8 cores, tmpfs shuffle,
-    2026-08-17): row 36.3-46.0s vs combined 42.5-46.3s — the local
-    shuffle is NOT network-bound, so the pack+merge CPU cancels the byte
-    saving; hence ``combine_shuffle`` defaults to False and the flag is
-    the cluster-deployment knob. Output is byte-identical either way
-    (test_index.py pins it), so flipping it is purely a physical-plan
-    choice.
-
-    Each partial is sorted by signed doc_id, so the reduce-side merge
-    (_merge_encode_stream) only has to argsort the concatenation of a
-    few sorted runs before encoding — and the final encoded bytes are
-    IDENTICAL to the row-shuffle path's (test_index.py pins it).
-    """
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        # numeric grouping only — no string sort: factorize terms to int
-        # codes (hash-based, O(n)), lexsort (doc_id, shard, code). Group
-        # ORDER is irrelevant (the shuffle re-groups anyway); the doc_id
-        # key keeps each partial internally sorted for the cheap
-        # reduce-side merge.
-        codes, uniques = pd.factorize(pdf["term"], sort=False)
-        shards = pdf["shard"].to_numpy(dtype=np.int64)
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        ws = pdf["w"].to_numpy(dtype=np.float64)
-        order = np.lexsort((ids, shards, codes))
-        codes, shards, ids, ws = codes[order], shards[order], ids[order], ws[order]
-        change = np.empty(len(codes), dtype=bool)
-        change[0] = True
-        change[1:] = (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
-        starts = np.flatnonzero(change)
-        bounds = np.append(starts, len(codes))
-        uniq_arr = np.asarray(uniques)
-        out_terms, out_shards, out_ids, out_ws, out_n = [], [], [], [], []
-        for i in range(len(starts)):
-            lo, hi = int(bounds[i]), int(bounds[i + 1])
-            out_terms.append(uniq_arr[codes[lo]])
-            out_shards.append(int(shards[lo]))
-            out_ids.append(ids[lo:hi].tobytes())
-            out_ws.append(ws[lo:hi].tobytes())
-            out_n.append(hi - lo)
-        yield pd.DataFrame(
-            {
-                "term": out_terms,
-                "shard": out_shards,
-                "n": out_n,
-                "ids_b": out_ids,
-                "ws_b": out_ws,
-            }
-        )
-
-
-def _merge_encode_groups(pdf: pd.DataFrame, starts: np.ndarray, end: int) -> pd.DataFrame:
-    """Merge the complete (term, shard) partial groups of a sorted slice
-    and encode each merged run (reduce side of the combiner path).
-
-    r8: one global concatenation + one lexsort by (group, signed id)
-    replaces the per-group concat/argsort/encode loop, then the shared
-    vectorized core (``_encode_group_arrays``) encodes every merged run
-    in one pass — byte-identical (signed order == codec unsigned order
-    via the sign-flip identity; partials hold disjoint doc sets, so no
-    tie order exists to preserve)."""
-    starts = np.asarray(starts, dtype=np.int64)
-    bounds = np.append(starts, end)
-    terms_rows = pdf["term"].to_numpy()
-    shards_rows = pdf["shard"].to_numpy()
-    ids_b = pdf["ids_b"].iloc[:end]
-    ws_b = pdf["ws_b"].iloc[:end]
-    counts = np.fromiter(
-        (len(b) >> 3 for b in ids_b), dtype=np.int64, count=end
-    )
-    ids = (
-        np.concatenate([np.frombuffer(b, dtype=np.int64) for b in ids_b])
-        if end
-        else np.empty(0, dtype=np.int64)
-    )
-    ws = (
-        np.concatenate([np.frombuffer(b, dtype=np.float64) for b in ws_b])
-        if end
-        else np.empty(0, dtype=np.float64)
-    )
-    row_el_off = np.zeros(end + 1, dtype=np.int64)
-    np.cumsum(counts, out=row_el_off[1:])
-    # element-space group starts + a per-element group label for the sort
-    el_starts = row_el_off[starts]
-    el_end = int(row_el_off[-1])
-    grp_sizes = np.diff(np.append(el_starts, el_end))
-    grp_of_el = np.repeat(np.arange(len(starts)), grp_sizes)
-    order = np.lexsort((ids, grp_of_el))
-    ids, ws = ids[order], ws[order]
-    return _encode_group_arrays(
-        terms_rows[starts], shards_rows[starts], ids, ws, el_starts, el_end
-    )
-
-
-def _merge_encode_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel over packed partials hash-partitioned by
-    (term, shard) and sorted by (term, shard): the same boundary-carrying
-    stream shape as _encode_sorted_stream, but each group is a handful of
-    packed partials instead of raw posting rows."""
-    pend: pd.DataFrame | None = None
-    for pdf in batches:
-        if pend is not None:
-            pdf = pd.concat([pend, pdf], ignore_index=True)
-            pend = None
-        if not len(pdf):
-            continue
-        terms = pdf["term"].to_numpy()
-        shards = pdf["shard"].to_numpy()
-        change = np.empty(len(pdf), dtype=bool)
-        change[0] = True
-        change[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-        starts = np.flatnonzero(change)
-        if len(starts) == 1:
-            pend = pdf
-            continue
-        tail_start = int(starts[-1])
-        pend = pdf.iloc[tail_start:].reset_index(drop=True)
-        yield _merge_encode_groups(pdf, starts[:-1], tail_start)
-    if pend is not None and len(pend):
-        yield _merge_encode_groups(pend, np.array([0]), len(pend))
-
-
 def stage_postings(
     docs: DataFrame,
     out_dir: str,
@@ -405,7 +268,6 @@ def stage_encode(
     n_shards: int,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    combine_shuffle: bool = False,
 ) -> None:
     """Stage 3: staged postings (``stage_postings`` output) -> compressed
     per-(term, shard) runs at ``out_dir/term_postings``. Public so the
@@ -441,21 +303,6 @@ def stage_encode(
         .sortWithinPartitions("tkey", "term", "shard", "doc_id")
         .drop("tkey")
     )
-    # optional combiner path (cluster knob, see _pack_partials_stream
-    # docstring): pack per-(term, shard) binary partials BEFORE the
-    # shuffle, then merge-encode reduce-side; byte-identical output,
-    # ~2-3x fewer shuffle bytes, measurably neutral on local tmpfs.
-    packed_runs = (
-        sharded.select("term", "shard", "doc_id", "w")
-        .mapInPandas(
-            _pack_partials_stream,
-            "term string, shard int, n long, ids_b binary, ws_b binary",
-        )
-        .repartition("term", "shard")
-        .withColumn("tkey", F.xxhash64("term"))
-        .sortWithinPartitions("tkey", "term", "shard")
-        .drop("tkey", "n")
-    )
     # big Arrow batches ONLY for this stage: posting rows are ~30B,
     # so 100k rows/batch is a few MB and amortizes the kernel's
     # per-batch overhead; the session default stays 10k because the
@@ -464,14 +311,9 @@ def stage_encode(
     prev = spark.conf.get(conf_key, "10000")
     spark.conf.set(conf_key, "100000")
     try:
-        if combine_shuffle:
-            packed_runs.mapInPandas(
-                _merge_encode_stream, INDEX_SCHEMA
-            ).write.mode("overwrite").parquet(f"{out_dir}/term_postings")
-        else:
-            sorted_runs.mapInPandas(
-                _encode_sorted_stream, INDEX_SCHEMA
-            ).write.mode("overwrite").parquet(f"{out_dir}/term_postings")
+        sorted_runs.mapInPandas(
+            _encode_sorted_stream, INDEX_SCHEMA
+        ).write.mode("overwrite").parquet(f"{out_dir}/term_postings")
     finally:
         spark.conf.set(conf_key, prev)
 
@@ -488,7 +330,6 @@ def build_index(
     source_snapshot: str | None = None,
     resume: bool = False,
     avgdl_override: float | None = None,
-    combine_shuffle: bool = False,
 ) -> dict:
     """Build the full index at ``out_dir``. Returns the manifest dict.
 
@@ -565,13 +406,9 @@ def build_index(
         # incremental.py for the drift/rebuild policy)
         avgdl = avgdl_override
 
-    def _encode():
-        stage_encode(
-            raw, out_dir, avgdl, n_shards, k1=k1, b=b,
-            combine_shuffle=combine_shuffle,
-        )
-
-    ckpt.run("encode", _encode)
+    ckpt.run(
+        "encode", lambda: stage_encode(raw, out_dir, avgdl, n_shards, k1=k1, b=b)
+    )
     tp = spark.read.parquet(f"{out_dir}/term_postings")
 
     def _term_stats():

@@ -1,58 +1,50 @@
 """BM25 top-k query over the compressed sharded index.
 
-Per (query, shard) an Arrow kernel runs **MaxScore with block-max
-pruning** over the decoded posting runs — exact top-k, vectorized:
+Scoring contract: every score is bit-identical to
+``tfidf_spark.oracle.OracleIndex.bm25_topk``, so ties break score-desc
+-> doc_id-asc exactly (SURVEY.md §2.5-W1). One kernel entry,
+``_topk(runs, terms, k)``, decides the score on every query path (the
+driver-local path on its collected runs, the batch paths once per
+(query, shard) slice) with one fold, ``_score``: per distinct term a
+column starting at 0.0 gathers ``idf * w`` from that term's runs, with
+``idf = math.log(n_docs / df)`` (``_idf``); the columns are then added
+left to right in query-term *occurrence* order, repeats included.
 
-1. Fully score the docs of the highest-upper-bound list (binary-search
-   lookups into the other lists via ``np.searchsorted``); the kth best
+Which documents get scored is decided by **MaxScore with block-max
+pruning** over the posting runs — exact top-k, vectorized:
+
+1. Fully score the docs of the highest-upper-bound run; the kth best
    score is the pruning threshold θ.
-2. Lists whose upper bounds sum (as a suffix) below θ are non-essential:
+2. Runs whose upper bounds sum (as a suffix) below θ are non-essential:
    no doc appearing ONLY in them can reach top-k.
-3. Remaining essential lists generate extra candidates, but only from
-   blocks whose ``idf*block_max + Σ other-list upper bounds ≥ θ`` —
+3. Remaining essential runs generate extra candidates, but only from
+   blocks whose ``bound(block_max) + Σ other-run upper bounds ≥ θ`` —
    the block-max skip. Candidates get exact scores; merge; top-k.
 
-Exactness argument: a doc excluded everywhere has, for its best list t*,
-``mult_t* · block_max_t*(doc) + Σ_{u≠t*} U_u < θ``, which upper-bounds its
-full score, so it cannot beat the kth result. Ties are broken
-score-desc → doc_id-asc (the engine-wide deterministic tie-break,
-SURVEY.md §2.5-W1).
+A run's upper bound is ``q_cnt · idf · block_max``. Bounds add in
+another order than exact scores, so θ is lowered by a relative 1e-12
+before bound comparisons: a document tied with the kth is never pruned.
 
 Shards hold disjoint doc sets, so per-shard top-k union ⊇ global top-k and
 the final window merge is exact. Hot (stop-like) terms therefore never
 serialize through one task — the index keeps them sharded.
-
-This path must reproduce ``operators.scoring.bm25_topk`` (the pure
-DataFrame M1 scorer) rank-identically; that equivalence is the core
-integration test.
 """
 
 from __future__ import annotations
+
+import math
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 from pyspark.sql.window import Window
 
 from tfidf_spark.index.builder import IndexHandle
 from tfidf_spark.index.codec import BLOCK_SIZE, decode_block, decode_postings
 
-_KERNEL_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType()),
-        StructField("k", IntegerType()),
-        StructField("doc_id", LongType()),
-        StructField("score", DoubleType()),
-    ]
-)
+_KERNEL_SCHEMA = "query_id long, k int, doc_id long, score double"
 
 # Decode accounting, meaningful when the kernel runs in-process (the
 # local fast path / tests): bytes actually varint-decoded vs the bytes an
@@ -60,23 +52,33 @@ _KERNEL_SCHEMA = StructType(
 # its own copy — treat it as diagnostics, not a metric aggregation.
 DECODE_STATS = {"bytes_decoded": 0, "bytes_total": 0}
 
+# relative slack on θ for bound comparisons (see module docstring)
+_THETA_SLACK = 1e-12
 
-class _LazyList:
+
+def _idf(n_docs: int, df: int) -> float:
+    """The one idf of every query path: Python's ``math.log``, as the
+    oracle computes it."""
+    return math.log(n_docs / int(df))
+
+
+class _Run:
     """One (term, shard) posting run, decoded block-by-block on demand.
 
     Lazy decode is the point of the block-max layout: for a stop-like
     term at corpus scale the run is most of the shard, and a top-k query
     usually needs only the blocks that (a) contain a candidate from a
-    rarer list or (b) beat the score threshold θ. Everything else is
+    rarer run or (b) beat the score threshold θ. Everything else is
     never even varint-decoded — the bytes are skipped via block_off.
     Signed docID order == sign-flipped unsigned order (codec invariant),
     so plain signed searchsorted is valid everywhere below.
     """
 
-    __slots__ = ("mult", "pb", "wb", "bl", "bm", "off", "n_blocks", "_cache")
+    __slots__ = ("term", "idf", "pb", "wb", "bl", "bm", "off", "n_blocks", "_cache")
 
-    def __init__(self, mult, pb, wb, block_last, block_max, block_off):
-        self.mult = float(mult)
+    def __init__(self, term, idf, pb, wb, block_last, block_max, block_off):
+        self.term = term
+        self.idf = float(idf)
         self.pb = pb
         self.wb = wb
         self.bl = np.asarray(block_last, dtype=np.int64)
@@ -99,9 +101,9 @@ class _LazyList:
         DECODE_STATS["bytes_decoded"] += len(self.pb)
         return decode_postings(self.pb, self.wb)
 
-    def add_scores(self, cand: np.ndarray, out: np.ndarray) -> None:
-        """out[j] += mult * weight(cand[j]) for every cand[j] present in
-        this list. Decodes ONLY the blocks that could contain a candidate
+    def gather(self, cand: np.ndarray, col: np.ndarray) -> None:
+        """col[j] = idf * weight(cand[j]) for every cand[j] present in
+        this run. Decodes ONLY the blocks that could contain a candidate
         (block b holds ids in (block_last[b-1], block_last[b]])."""
         if not self.n_blocks or not cand.size:
             return
@@ -113,37 +115,55 @@ class _LazyList:
             pos = np.searchsorted(ids, cand[sel])
             pos_c = np.minimum(pos, ids.size - 1)
             hit = (pos < ids.size) & (ids[pos_c] == cand[sel])
-            out[sel[hit]] += self.mult * w[pos_c[hit]]
+            col[sel[hit]] = self.idf * w[pos_c[hit]]
 
 
-def _topk_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-    query_id = int(pdf["query_id"].iloc[0])
-    k = int(pdf["k"].iloc[0])
-    lists = []
-    for row in pdf.itertuples(index=False):
-        L = _LazyList(
-            row.mult,
-            bytes(row.postings),
-            bytes(row.weights),
-            row.block_last,
-            row.block_max,
-            row.block_off,
-        )
-        if L.n_blocks:
-            lists.append(L)
+def _runs(rows, idf_of) -> list[_Run]:
+    """Runs from index rows (Spark Rows or pandas itertuples)."""
+    return [
+        _Run(r.term, idf_of(r), bytes(r.postings), bytes(r.weights),
+             r.block_last, r.block_max, r.block_off)
+        for r in rows
+    ]
+
+
+def _fold(cols: dict[str, np.ndarray], terms: list[str], n: int) -> np.ndarray:
+    """Add the per-term columns left to right in query-term occurrence
+    order. A term without a column has no run and adds only 0.0."""
+    s = np.zeros(n, dtype=np.float64)
+    for t in terms:
+        col = cols.get(t)
+        if col is not None:
+            s += col
+    return s
+
+
+def _score(cand, runs, terms, cols=None) -> np.ndarray:
+    """Exact scores of ``cand``: each run gathers into its term's column
+    (starting at 0.0 unless ``cols`` already holds it), then ``_fold``."""
+    cols = dict(cols or {})
+    for r in runs:
+        col = cols.get(r.term)
+        if col is None:
+            col = cols[r.term] = np.zeros(cand.size, dtype=np.float64)
+        r.gather(cand, col)
+    return _fold(cols, terms, cand.size)
+
+
+def _topk(runs: list[_Run], terms: list[str], k: int):
+    """Exact top-k ``(doc_ids, scores)`` over ``runs`` for the query-term
+    occurrence list ``terms``, ordered score-desc, doc_id-asc."""
+    lists = [r for r in runs if r.n_blocks]
     if not lists:
-        return pd.DataFrame(columns=["query_id", "k", "doc_id", "score"]).astype(
-            {"query_id": "int64", "k": "int32", "doc_id": "int64", "score": "float64"}
-        )
-    # single-list query (e.g. a lone stop-like term): the ranking is
-    # determined by the weights buffer alone (score = mult * w), which is
-    # a raw float64 read — no varint decode needed. Decode only the
-    # blocks holding the winners (+ their score-ties, so the doc_id
-    # tie-break stays exact).
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    # single-run query (e.g. a lone stop-like term): the ranking is
+    # determined by the weights buffer alone, which is a raw float64 read
+    # — no varint decode needed. Decode only the blocks holding the
+    # winners (+ their score-ties, so the doc_id tie-break stays exact).
     if len(lists) == 1:
         L = lists[0]
         w = np.frombuffer(L.wb, dtype=np.float64)
-        s = L.mult * w
+        s = _fold({L.term: L.idf * w}, terms, w.size)
         if s.size > k:
             kth = np.partition(s, s.size - k)[s.size - k]
             cand_pos = np.flatnonzero(s >= kth)
@@ -157,30 +177,35 @@ def _topk_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             ids[sel] = blk_ids[cand_pos[sel] - lo]
         sc = s[cand_pos]
         order = np.lexsort((ids, -sc))[:k]
-        return pd.DataFrame(
-            {
-                "query_id": np.full(order.size, query_id, dtype=np.int64),
-                "k": np.full(order.size, k, dtype=np.int32),
-                "doc_id": ids[order],
-                "score": sc[order],
-            }
-        )
+        return ids[order], sc[order]
 
-    # negative-idf (df == N) terms still contribute; upper bound uses max(.,0)
-    lists.sort(key=lambda L: -(L.mult * float(L.bm.max())))
-    U = np.array([max(L.mult * float(L.bm.max()), 0.0) for L in lists])
+    # upper bound of one occurrence-weighted term contribution; negative-
+    # idf (df == N) terms still contribute, so bounds use max(., 0)
+    reps = Counter(terms)
+    ranked = sorted(
+        ((reps[L.term] * L.idf, L) for L in lists),
+        key=lambda p: -(p[0] * float(p[1].bm.max())),
+    )
+    scale = [c for c, _ in ranked]
+    lists = [L for _, L in ranked]
+    U = np.array([max(c * float(L.bm.max()), 0.0) for c, L in ranked])
 
-    # pass 1: all docs of the top-bound list (typically the rarest term —
+    # pass 1: all docs of the top-bound run (typically the rarest term —
     # hot stop-like terms have low idf and land at the tail), fully
-    # scored. Own-list contributions come straight from the decoded
-    # weights; other lists decode only candidate-bearing blocks.
+    # scored. The top run's own column comes straight from its decoded
+    # weights; its term's other runs hold none of these docs, and other
+    # terms' runs decode only candidate-bearing blocks.
     top = lists[0]
     cand0, w0 = top.decode_all()
-    s0 = top.mult * w0
-    for L in lists[1:]:
-        L.add_scores(cand0, s0)
+    s0 = _score(
+        cand0,
+        [L for L in lists if L.term != top.term],
+        terms,
+        {top.term: top.idf * w0},
+    )
     if cand0.size > k:
         theta = np.partition(s0, cand0.size - k)[cand0.size - k]
+        theta -= _THETA_SLACK * abs(theta)
     else:
         theta = -np.inf
 
@@ -197,52 +222,52 @@ def _topk_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     for t in range(1, n_essential):
         L = lists[t]
         rest = U.sum() - U[t]
-        # clamp like U: if mult were ever negative (df > n_docs from stats
+        # clamp like U: if idf were ever negative (df > n_docs from stats
         # drift) the unclamped product is NOT an upper bound and pruning
         # would turn unsound.
-        keep_block = (np.maximum(L.mult * L.bm, 0.0) + rest) >= theta
+        keep_block = (np.maximum(scale[t] * L.bm, 0.0) + rest) >= theta
         for b in np.flatnonzero(keep_block):
             ids, _ = L.block(int(b))
             extra_parts.append(ids)
+    all_ids, all_s = cand0, s0
     if extra_parts:
         extra = np.unique(np.concatenate(extra_parts))
         pos = np.searchsorted(cand0, extra)
-        pos_c = np.minimum(pos, cand0.size - 1) if cand0.size else pos
-        fresh = (
-            extra[~((pos < cand0.size) & (cand0[pos_c] == extra))]
-            if cand0.size
-            else extra
-        )
+        pos_c = np.minimum(pos, cand0.size - 1)
+        fresh = extra[~((pos < cand0.size) & (cand0[pos_c] == extra))]
         if fresh.size:
-            # a fresh candidate is by definition absent from the top list
-            # (cand0 IS that list), so only lists[1:] can contribute
-            s_extra = np.zeros(fresh.size, dtype=np.float64)
-            for L in lists[1:]:
-                L.add_scores(fresh, s_extra)
+            # a fresh candidate is by definition absent from the top run
+            # (cand0 IS that run), so only lists[1:] can contribute
             all_ids = np.concatenate([cand0, fresh])
-            all_s = np.concatenate([s0, s_extra])
-        else:
-            all_ids, all_s = cand0, s0
-    else:
-        all_ids, all_s = cand0, s0
+            all_s = np.concatenate([s0, _score(fresh, lists[1:], terms)])
 
     order = np.lexsort((all_ids, -all_s))[:k]
+    return all_ids[order], all_s[order]
+
+
+def _topk_slice(pdf: pd.DataFrame, n_docs: int) -> pd.DataFrame:
+    """``_topk`` over the rows of one (query_id, shard) slice; each row is
+    one run and carries the query's ``terms`` array and its term's df."""
+    query_id = int(pdf["query_id"].iloc[0])
+    k = int(pdf["k"].iloc[0])
+    runs = _runs(pdf.itertuples(index=False), lambda r: _idf(n_docs, r.df))
+    ids, scores = _topk(runs, list(pdf["terms"].iloc[0]), k)
     return pd.DataFrame(
         {
-            "query_id": np.full(order.size, query_id, dtype=np.int64),
-            "k": np.full(order.size, k, dtype=np.int32),
-            "doc_id": all_ids[order],
-            "score": all_s[order],
+            "query_id": np.full(ids.size, query_id, dtype=np.int64),
+            "k": np.full(ids.size, k, dtype=np.int32),
+            "doc_id": ids,
+            "score": scores,
         }
     )
 
 
-def _topk_shard_stream(batches):
+def _topk_stream(batches, n_docs: int):
     """mapInPandas kernel over rows hash-partitioned by (query_id,
     shard) and sorted so each group's rows are adjacent: slice group
     boundaries per Arrow batch (carrying a possibly-continuing tail) and
-    run the MaxScore kernel per slice. Replaces groupBy().applyInPandas,
-    whose ~2 ms per-group Arrow round-trip dominated the batch path at
+    run the kernel per slice. Replaces groupBy().applyInPandas, whose
+    ~2 ms per-group Arrow round-trip dominated the batch path at
     queries x shards groups (r8 profile: ~1.4 s of the 2.2 s batch50
     main job)."""
     pend: pd.DataFrame | None = None
@@ -265,9 +290,9 @@ def _topk_shard_stream(batches):
         pend = pdf.iloc[tail:].reset_index(drop=True)
         bounds = np.append(starts[:-1], tail)
         for i in range(len(bounds) - 1):
-            yield _topk_shard(pdf.iloc[bounds[i] : bounds[i + 1]])
+            yield _topk_slice(pdf.iloc[bounds[i] : bounds[i + 1]], n_docs)
     if pend is not None and len(pend):
-        yield _topk_shard(pend)
+        yield _topk_slice(pend, n_docs)
 
 
 def bm25_query_index(
@@ -289,32 +314,31 @@ def bm25_query_index(
     batches set False to use a shuffle join instead.
     """
     spark = queries.sparkSession
-    # prune_by_collect=True already commits to collecting the batch's
-    # distinct terms driver-side, so the batch is driver-manageable by
-    # contract — collect the query ROWS instead (one plain scan job, no
-    # shuffle) and build qterms as a literal local relation. The r7
-    # shape paid an explode+groupBy+distinct+collect job AND repeated
-    # the explode+groupBy shuffle inside the main job (r8 profile:
-    # ~0.4 s of the 2.5 s batch50 path). Distributed batches
+    # One row per (query, distinct term); the query's whole ``terms``
+    # array rides along, so the kernel folds per occurrence in query
+    # order. prune_by_collect=True already commits to collecting the
+    # batch's distinct terms driver-side, so the batch is
+    # driver-manageable by contract — collect the query ROWS instead
+    # (one plain scan job, no shuffle) and build qterms and the original
+    # k as literal local relations. Distributed batches
     # (prune_by_collect=False) keep the general plan.
-    local_qterms: list[tuple[int, int, str, int]] | None = None
     if prune_by_collect:
-        from collections import Counter
-
-        local_qterms = [
-            (int(r["query_id"]), int(r["k"]), t, int(c))
+        qrows = [
+            (int(r["query_id"]), int(r["k"]), list(r["terms"] or []))
             for r in queries.collect()
-            for t, c in Counter(r["terms"] or []).items()
         ]
         qterms = spark.createDataFrame(
-            local_qterms, "query_id long, k int, term string, q_cnt long"
+            [(q, k, ts, t) for q, k, ts in qrows for t in dict.fromkeys(ts)],
+            "query_id long, k int, terms array<string>, term string",
+        )
+        orig_k = spark.createDataFrame(
+            [(q, k) for q, k, _ in qrows], "query_id long, k_orig int"
         )
     else:
-        qterms = (
-            queries.select("query_id", "k", F.explode("terms").alias("term"))
-            .groupBy("query_id", "k", "term")
-            .agg(F.count(F.lit(1)).alias("q_cnt"))
+        qterms = queries.select(
+            "query_id", "k", "terms", F.explode(F.array_distinct("terms")).alias("term")
         )
+        orig_k = queries.select("query_id", F.col("k").alias("k_orig"))
     # Tombstoned docs are filtered AFTER the kernel; each per-shard top-k
     # over-fetches by the UNAPPLIED tombstone count so the final top-k
     # never under-fills (tombstones already physically applied by
@@ -331,10 +355,8 @@ def bm25_query_index(
     if prune_by_collect:
         if known_terms is not None:
             terms = sorted(set(known_terms))
-        elif local_qterms is not None:
-            terms = sorted({t for _, _, t, _ in local_qterms})
         else:
-            terms = [r["term"] for r in qterms.select("term").distinct().collect()]
+            terms = sorted({t for _, _, q_terms in qrows for t in q_terms})
         if not terms:
             return spark.createDataFrame(
                 [], "query_id long, doc_id long, score double, rank int"
@@ -342,25 +364,19 @@ def bm25_query_index(
         tp = tp.filter(F.col("term").isin(terms))
         ts = ts.filter(F.col("term").isin(terms))
 
-    idf = F.log(F.lit(float(index.n_docs)) / F.coalesce(F.col("df"), F.lit(1)).cast("double"))
-    q_with_mult = (
-        qterms.join(ts, "term", "left")
-        .select(
-            "query_id",
-            "k",
-            "term",
-            (F.col("q_cnt").cast("double") * idf).alias("mult"),
-        )
+    q_with_df = qterms.join(ts, "term", "left").select(
+        "query_id", "k", "terms", "term",
+        F.coalesce(F.col("df"), F.lit(1)).alias("df"),
     )
-
-    rows = tp.join(F.broadcast(q_with_mult), "term", "inner").select(
-        "query_id", "k", "term", "mult", "shard",
+    rows = tp.join(F.broadcast(q_with_df), "term", "inner").select(
+        "query_id", "k", "terms", "term", "df", "shard",
         "postings", "weights", "block_last", "block_max", "block_off",
     )
+    n_docs = index.n_docs
     per_shard = (
         rows.repartition("query_id", "shard")
         .sortWithinPartitions("query_id", "shard", "term")
-        .mapInPandas(_topk_shard_stream, _KERNEL_SCHEMA)
+        .mapInPandas(lambda batches: _topk_stream(batches, n_docs), _KERNEL_SCHEMA)
     )
     if n_ts:
         per_shard = per_shard.join(
@@ -368,7 +384,6 @@ def bm25_query_index(
         )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = per_shard.withColumn("rank", F.row_number().over(w))
-    orig_k = queries.select("query_id", F.col("k").alias("k_orig"))
     return (
         ranked.join(F.broadcast(orig_k), "query_id")
         .filter(F.col("rank") <= F.col("k_orig"))
@@ -396,12 +411,12 @@ def bm25_query_terms_local(
 ) -> list[tuple[int, float]]:
     """Low-latency single-query path: ONE pruned scan collects the
     query's (term, shard) runs to the driver (a few compressed blobs),
-    then the MaxScore kernel runs locally — no shuffle, no window, no
-    Python-worker round trip. This is the query-coordinator pattern a
-    serving tier uses; the distributed path (bm25_query_terms) is for
-    query BATCHES. Exact same semantics: shards are disjoint doc sets,
-    so feeding each run as its own list to the kernel double-counts
-    nothing, and df(term) = Σ df_shard of the collected runs.
+    then the kernel runs locally — no shuffle, no window, no Python-worker
+    round trip. This is the query-coordinator pattern a serving tier
+    uses; the distributed path (bm25_query_terms) is for query BATCHES.
+    Exact same scores: shards are disjoint doc sets, so feeding each run
+    to the kernel double-counts nothing, and df(term) = Σ df_shard of
+    the collected runs.
 
     ``df_budget`` guards the driver: a stop-like term's posting list is
     proportional to the corpus, and collecting it would OOM the driver at
@@ -411,14 +426,9 @@ def bm25_query_terms_local(
     returns identical results — the executors decode, the driver only
     sees k rows.
     """
-    import math
-
-    import pandas as pd
-
     if not terms:
         return []
     distinct = sorted(set(terms))
-    q_cnt = {t: terms.count(t) for t in distinct}
     df_dict = getattr(index, "_df_dict", None)
     if df_dict is not None:
         # warmed handle (IndexHandle.warm): the term dictionary is
@@ -454,28 +464,9 @@ def bm25_query_terms_local(
     deleted = (
         {r["doc_id"] for r in ts.collect()} if index.n_tombstones else set()
     )
-    k_fetch = k + len(deleted)
-    pdf = pd.DataFrame(
-        {
-            "query_id": [0] * len(rows),
-            "k": [k_fetch] * len(rows),
-            "term": [r["term"] for r in rows],
-            "mult": [
-                q_cnt[r["term"]] * math.log(index.n_docs / df_total[r["term"]])
-                for r in rows
-            ],
-            "shard": [r["shard"] for r in rows],
-            "postings": [bytes(r["postings"]) for r in rows],
-            "weights": [bytes(r["weights"]) for r in rows],
-            "block_last": [r["block_last"] for r in rows],
-            "block_max": [r["block_max"] for r in rows],
-            "block_off": [r["block_off"] for r in rows],
-        }
-    )
-    out = _topk_shard(pdf)
+    runs = _runs(rows, lambda r: _idf(index.n_docs, df_total[r.term]))
+    ids, scores = _topk(runs, list(terms), k + len(deleted))
     result = [
-        (int(d), float(s))
-        for d, s in zip(out["doc_id"], out["score"])
-        if int(d) not in deleted
+        (int(d), float(s)) for d, s in zip(ids, scores) if int(d) not in deleted
     ]
     return result[:k]

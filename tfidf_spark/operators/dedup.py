@@ -302,9 +302,9 @@ def simhash(postings: DataFrame, bits: int = 60) -> DataFrame:
     Tungsten sort) into a boundary-carrying Arrow kernel that computes
     all ``bits`` bit-sums vectorized in numpy (the encode-stage pattern,
     index/builder._encode_sorted_stream). Three shapes were measured
-    under the interleaved-round median protocol (tools/query_medians.py,
-    sf0.1; numbers live in BENCH/QUERY_MEDIANS.json, kept out of this
-    docstring because the host's absolute timings drift 2x day to day):
+    as interleaved-round medians at sf0.1 (numbers live in
+    BENCH/QUERY_MEDIANS.json, kept out of this docstring because the
+    host's absolute timings drift 2x day to day):
 
     - 60x bit-row explode + two shuffles: lowest local wall time, but it
       shuffles 60x the posting table — at 10^12 files that inflation IS

@@ -92,8 +92,7 @@ def bm25_topk(
 ) -> DataFrame:
     """Pure-DataFrame BM25 top-k: ``(doc_id, score)``.
 
-    This is the M1 scorer and the internal oracle for the compressed-index
-    WAND path (index/query.py must reproduce it exactly). Plan shape:
+    This is the M1 scorer. Plan shape:
 
       postings ⋈ broadcast(query terms+idf)  — broadcast hash join, no shuffle
       groupBy(doc_id) sum                    — 1 shuffle
@@ -105,6 +104,12 @@ def bm25_topk(
     Duplicate query terms contribute once per occurrence, matching a Σ over
     query term *occurrences* (the reference has no doc-ranked endpoint; this
     generalizes its per-term ranking contract, SURVEY.md §2.5-W3).
+
+    Limit: scores agree with ``OracleIndex.bm25_topk`` only to the last
+    ulp. Neither the groupBy's partial-sum order nor the ``q_cnt·idf``
+    fold is fixed, so documents tied in exact arithmetic may come out one
+    ulp apart and order differently. ``index/query.py`` is the
+    bit-identical path.
     """
     spark = postings.sparkSession
     if not query_terms:

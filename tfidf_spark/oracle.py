@@ -5,8 +5,9 @@ tf = count/total (app/repositories/document.py:165), df with default-1
 (app/repositories/document.py:299), BM25 k1=1.2 b=0.75 over the same
 statistics, tie-break score-desc -> doc_id-asc.
 
-Used only in tests (hundreds of docs); the Spark engine must match it
-rank-identically.
+Used only in tests and the benchmark (hundreds to thousands of docs);
+the index query paths must match its scores bit for bit, and therefore
+its rank order exactly.
 """
 
 from __future__ import annotations
@@ -56,8 +57,12 @@ class OracleIndex:
         )
 
     def bm25_topk(self, terms: list[str], k: int) -> list[tuple[int, float]]:
-        """Top-k (doc_id, score); duplicate query terms count per occurrence
-        (matches operators.scoring.bm25_topk)."""
+        """Top-k (doc_id, score). This fold is the engine's scoring
+        contract: each score starts at 0.0 and adds ``idf * weight`` once
+        per query-term occurrence, in query order, so a repeated term adds
+        its contribution once per repeat. ``index/query.py`` reproduces it
+        bit for bit; ``operators.scoring.bm25_topk`` agrees up to the last
+        ulp (see its docstring)."""
         scores: dict[int, float] = {}
         for term in terms:
             idf = self.idf(term)

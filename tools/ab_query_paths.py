@@ -6,8 +6,8 @@ inline from the unchanged building blocks).
 
 Sides per metric, run alternating inside ONE Spark session:
 
-- batch_kernel: groupBy().applyInPandas(_topk_shard)  vs  the r8
-  repartition+sort+mapInPandas(_topk_shard_stream) — identical rows
+- batch_kernel: groupBy().applyInPandas(_topk_slice)  vs  the r8
+  repartition+sort+mapInPandas(_topk_stream) — identical rows
   asserted (scores at 1e-9).
 - signatures: doc_shingle_arrays -> minhash_signatures (shingle strings
   cross the Python->JVM boundary, md5 JVM-side)  vs  the r8 one-kernel
@@ -31,7 +31,6 @@ import statistics
 import sys
 import tempfile
 import time
-from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -88,35 +87,28 @@ def main():
         idx = load_index(spark, f"{workdir}/idx")
         qset = reference_queries(50)
         known = sorted({t for _, ts, _ in qset for t in ts})
-        local_qterms = [
-            (int(q), int(k), t, int(c))
-            for q, ts, k in qset
-            for t, c in Counter(ts).items()
-        ]
         qterms = spark.createDataFrame(
-            local_qterms, "query_id long, k int, term string, q_cnt long"
+            [(int(q), int(k), ts, t) for q, ts, k in qset for t in dict.fromkeys(ts)],
+            "query_id long, k int, terms array<string>, term string",
         )
         tp = idx.term_postings.filter(F.col("term").isin(known))
         ts_ = idx.term_stats.filter(F.col("term").isin(known))
-        idf = F.log(
-            F.lit(float(idx.n_docs))
-            / F.coalesce(F.col("df"), F.lit(1)).cast("double")
+        q_with_df = qterms.join(ts_, "term", "left").select(
+            "query_id", "k", "terms", "term",
+            F.coalesce(F.col("df"), F.lit(1)).alias("df"),
         )
-        q_with_mult = qterms.join(ts_, "term", "left").select(
-            "query_id", "k", "term",
-            (F.col("q_cnt").cast("double") * idf).alias("mult"),
-        )
-        rows = tp.join(F.broadcast(q_with_mult), "term", "inner").select(
-            "query_id", "k", "term", "mult", "shard",
+        rows = tp.join(F.broadcast(q_with_df), "term", "inner").select(
+            "query_id", "k", "terms", "term", "df", "shard",
             "postings", "weights", "block_last", "block_max", "block_off",
         )
+        n_docs = idx.n_docs
         kernel_r7 = rows.groupBy("query_id", "shard").applyInPandas(
-            Q._topk_shard, Q._KERNEL_SCHEMA
+            lambda pdf: Q._topk_slice(pdf, n_docs), Q._KERNEL_SCHEMA
         )
         kernel_r8 = (
             rows.repartition("query_id", "shard")
             .sortWithinPartitions("query_id", "shard", "term")
-            .mapInPandas(Q._topk_shard_stream, Q._KERNEL_SCHEMA)
+            .mapInPandas(lambda it: Q._topk_stream(it, n_docs), Q._KERNEL_SCHEMA)
         )
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

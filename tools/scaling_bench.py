@@ -286,9 +286,10 @@ def orchestrate() -> None:
         for i, w in enumerate(windows)
     )
     os.makedirs("BENCH", exist_ok=True)
-    # preserve the marker-delimited sections other tools maintain in this
-    # file: per-query medians (tools/query_medians.py) and the PRIMARY
-    # per-stage scaling evidence (tools/stage_scaling.py)
+    # preserve the marker-delimited sections kept elsewhere in this file:
+    # the PRIMARY per-stage scaling evidence (tools/stage_scaling.py) and
+    # the recorded per-query medians (no tool rewrites those any more;
+    # per-query timing now comes from interleaved perfbench runs)
     medians_block = ""
     try:
         with open("BENCH/BASELINE.md") as f:
