@@ -5,18 +5,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tfidf_spark.functions.tokenize import py_tokenize
 from tfidf_spark.operators.dedup import (
-    doc_shingle_arrays,
     doc_shingles,
     exact_duplicates,
     jaccard_pairs,
     lsh_bucket_stats,
     lsh_candidate_pairs,
-    minhash_signatures,
-    simhash,
+    minhash_signatures_docs,
+    simhash_docs,
     simhash_near_pairs,
 )
-from tfidf_spark.operators.postings import build_postings
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -50,7 +49,7 @@ def test_jaccard_finds_near_dup(docs):
 
 
 def test_minhash_lsh_surfaces_near_dups(docs):
-    sig = minhash_signatures(doc_shingle_arrays(docs))
+    sig = minhash_signatures_docs(docs)
     cand = {(r["a"], r["b"]): r["n_bands"] for r in lsh_candidate_pairs(sig).collect()}
     assert cand[(1, 2)] == 8                      # identical: all bands collide
     assert (1, 3) in cand                         # near dup: >=1 band
@@ -58,16 +57,22 @@ def test_minhash_lsh_surfaces_near_dups(docs):
 
 
 def test_minhash_matches_exploded_form(docs):
-    """The zero-shuffle array MinHash must equal min(h(s) XOR k_seed)
-    over the exploded shingle rows (the definitional form / the DuckDB
-    oracle), with h and k computed independently here in Python."""
+    """The one-kernel MinHash must equal min(h(s) XOR k_seed) over the
+    exploded shingle rows (the definitional form / the DuckDB oracle),
+    with h and k computed independently here in Python. Docs with fewer
+    than n tokens emit no rows."""
     import hashlib
 
+    with_tiny = docs.union(
+        docs.sparkSession.createDataFrame(
+            [(11, "one two"), (12, "")], "doc_id bigint, content string"
+        )
+    )
     sig = {
         (r["doc_id"], r["seed"]): r["minhash"]
-        for r in minhash_signatures(doc_shingle_arrays(docs)).collect()
+        for r in minhash_signatures_docs(with_tiny, n=3).collect()
     }
-    shingle_rows = doc_shingles(docs).collect()
+    shingle_rows = doc_shingles(with_tiny, n=3).collect()
     ks = {s: int(hashlib.md5(str(s).encode()).hexdigest()[:15], 16) for s in range(8)}
     ref: dict = {}
     for r in shingle_rows:
@@ -76,6 +81,7 @@ def test_minhash_matches_exploded_form(docs):
             key = (r["doc_id"], s)
             ref[key] = min(ref.get(key, 1 << 62), h ^ k)
     assert sig == ref
+    assert not any(d in (11, 12) for d, _ in sig)
 
 
 def test_lsh_hot_bucket_cap(spark):
@@ -87,7 +93,7 @@ def test_lsh_hot_bucket_cap(spark):
     cold = [(1, "unique alpha beta gamma delta epsilon zeta eta theta"),
             (2, "unique alpha beta gamma delta epsilon zeta eta iota")]
     docs = spark.createDataFrame(hot + cold, "doc_id bigint, content string")
-    sig = minhash_signatures(doc_shingle_arrays(docs))
+    sig = minhash_signatures_docs(docs)
     stats = lsh_bucket_stats(sig).collect()
     assert max(r["size"] for r in stats) == 50
     capped = lsh_candidate_pairs(sig, max_bucket=10).collect()
@@ -99,8 +105,7 @@ def test_lsh_hot_bucket_cap(spark):
 
 
 def test_simhash_near_pairs(docs):
-    p = build_postings(docs).select("doc_id", "term", "cnt")
-    sim = simhash(p).cache()
+    sim = simhash_docs(docs).cache()
     vals = {r["doc_id"]: r["simhash"] for r in sim.collect()}
     assert vals[1] == vals[2]                     # identical docs, same hash
     near = {
@@ -144,7 +149,7 @@ def test_connected_components_on_lsh_pairs(docs):
     holding the exact dup AND the near dup."""
     from tfidf_spark.operators.dedup import connected_components
 
-    sig = minhash_signatures(doc_shingle_arrays(docs))
+    sig = minhash_signatures_docs(docs)
     pairs = lsh_candidate_pairs(sig)
     got = {r["doc_id"]: r["component_id"]
            for r in connected_components(pairs.select("a", "b")).collect()}
@@ -271,43 +276,30 @@ def test_star_round_budget_is_forwarded(spark):
     assert got.select("component_id").distinct().count() == 1
 
 
-def test_simhash_docs_identical_to_postings_form(docs):
-    """The r8 zero-shuffle kernel (simhash_docs) must produce EXACTLY the
-    postings-form fingerprints: same md5 semantics, same integer
-    bit-sums, zero-token docs absent from both."""
-    from tfidf_spark.operators.dedup import simhash_docs
+def _py_simhash(text: str, bits: int = 60) -> int | None:
+    """Count-weighted SimHash in plain Python: per term, md5 -> 60-bit
+    int; bit i sums +cnt where the term's bit i is set, -cnt where not;
+    a positive sum sets bit i. None for a zero-token doc."""
+    import hashlib
+    from collections import Counter
 
-    with_empty = docs.union(
-        docs.sparkSession.createDataFrame(
-            [(9, ""), (10, "!!! ...")], "doc_id bigint, content string"
-        )
-    )
-    p = build_postings(with_empty).select("doc_id", "term", "cnt")
-    old = {r["doc_id"]: r["simhash"] for r in simhash(p).collect()}
-    new = {r["doc_id"]: r["simhash"] for r in simhash_docs(with_empty).collect()}
-    assert old == new
-    assert 9 not in new and 10 not in new
+    counts = Counter(py_tokenize(text))
+    if not counts:
+        return None
+    sums = [0] * bits
+    for term, cnt in counts.items():
+        h = int(hashlib.md5(term.encode()).hexdigest()[:15], 16)
+        for i in range(bits):
+            sums[i] += cnt if (h >> i) & 1 else -cnt
+    return sum(1 << i for i in range(bits) if sums[i] > 0)
 
 
-def test_minhash_signatures_docs_identical_to_operator_form(docs):
-    """The r8 one-kernel signature path must reproduce the
-    doc_shingle_arrays -> minhash_signatures pipeline exactly (same md5
-    hash family, same xor-min), including docs with < n tokens emitting
-    nothing."""
-    from tfidf_spark.operators.dedup import minhash_signatures_docs
-
-    with_tiny = docs.union(
-        docs.sparkSession.createDataFrame(
-            [(11, "one two"), (12, "")], "doc_id bigint, content string"
-        )
-    )
-    old = {
-        (r["doc_id"], r["seed"]): r["minhash"]
-        for r in minhash_signatures(doc_shingle_arrays(with_tiny, n=3)).collect()
-    }
-    new = {
-        (r["doc_id"], r["seed"]): r["minhash"]
-        for r in minhash_signatures_docs(with_tiny, n=3).collect()
-    }
-    assert old == new
-    assert not any(d in (11, 12) for d, _ in new)
+def test_simhash_docs_matches_python_reference(spark):
+    """The zero-shuffle SimHash kernel equals a pure-Python SimHash,
+    zero-token docs absent."""
+    rows = DOCS + [(9, ""), (10, "!!! ...")]
+    docs = spark.createDataFrame(rows, "doc_id bigint, content string")
+    got = {r["doc_id"]: r["simhash"] for r in simhash_docs(docs).collect()}
+    ref = {d: _py_simhash(t) for d, t in rows}
+    assert got == {d: h for d, h in ref.items() if h is not None}
+    assert 9 not in got and 10 not in got

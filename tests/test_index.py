@@ -111,7 +111,13 @@ def test_batch_queries_on_real_data(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "terms,k",
-    [(["a", "c"], 10), (["a", "a", "b"], 2), (["zzz"], 5), (["c", "zzz"], 5)],
+    [
+        (["a", "c"], 10),
+        (["a", "a", "b"], 2),
+        (["zzz"], 5),
+        (["c", "zzz"], 5),
+        (["a", "c"], 0),
+    ],
 )
 def test_local_fast_path_matches_distributed(spark, tiny_corpus, tiny_index, terms, k):
     from tfidf_spark.index.query import bm25_query_terms_local

@@ -13,7 +13,7 @@ suite."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from tfidf_spark.index.codec import encode_postings
@@ -74,8 +74,15 @@ def query_strategy(draw):
     return runs, terms
 
 
+_ONE_RUN = [("a", 1.0, np.array([1, 2, 3]), np.array([0.5, 0.2, 0.9]))]
+_TWO_RUNS = _ONE_RUN + [("b", 2.0, np.array([2, 4]), np.array([0.3, 0.1]))]
+
+
 @settings(max_examples=300, deadline=None)
-@given(query_strategy(), st.integers(1, 30))
+@given(query_strategy(), st.integers(0, 30))
+# k = 0 on the one-run branch and on the MaxScore branch: no rows
+@example((_ONE_RUN, ["a"]), 0)
+@example((_TWO_RUNS, ["a", "b"]), 0)
 def test_kernel_matches_oracle_fold(query, k):
     runs, terms = query
     _check(runs, terms, k)

@@ -63,23 +63,6 @@ def test_minhash_signatures_zero_shuffle(spark):
     assert plan.count("ArrowEvalPython") == 0
 
 
-def test_minhash_operator_form_hashes_each_shingle_once(spark):
-    """Hash-once contract of the OPERATOR pipeline (still used by
-    shingle-table callers): the md5 transform over the shingle array
-    must appear ONCE in the plan, with the 8 seed permutations as
-    integer xors over the shared array — CollapseProject must not
-    inline the non-cheap hs projection into every seed expression (that
-    would put 8 md5 passes back on every shingle)."""
-    from tfidf_spark.operators.dedup import doc_shingle_arrays, minhash_signatures
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = minhash_signatures(doc_shingle_arrays(docs, n=3, text_col="text"))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert plan.count("md5") == 1
-    assert plan.count("array_min") == 8
-
-
 def test_simhash_zero_shuffle(spark):
     """SimHash from raw docs (r8, dedup.simhash_docs) = ZERO shuffle:
     tokenize + count + md5 + bit-sum all in one narrow Arrow kernel —
@@ -89,26 +72,6 @@ def test_simhash_zero_shuffle(spark):
     assert "MapInPandas" in plan
     assert "Generate explode" not in plan
     assert "HashAggregate" not in plan
-
-
-def test_simhash_postings_form_single_shuffle(spark):
-    """The postings-input operator (dedup.simhash) keeps its contract:
-    exactly ONE shuffle of the raw posting rows into the vectorized
-    kernel — the form incremental pipelines use when postings already
-    exist."""
-    from tfidf_spark.operators import dedup
-    from tfidf_spark.operators.postings import build_postings
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    df = dedup.simhash(
-        build_postings(docs, text_col="text").select("doc_id", "term", "cnt")
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning(doc_id") == 1
-    post_shuffle = plan.split("Exchange hashpartitioning(doc_id")[0]
-    assert "MapInPandas" in post_shuffle
-    assert "Generate explode" not in post_shuffle
-    assert "HashAggregate" not in post_shuffle
 
 
 def test_lsh_single_signature_pass_two_exchanges(spark):

@@ -208,8 +208,7 @@ def q_minhash_signature(spark, sf_dir):
     functions/hashing.py for why md5 hex ordering is a valid hash order).
     r8: tokenize+shingle+md5+xor-min in ONE narrow kernel
     (dedup.minhash_signatures_docs) — zero shuffle, and the shingle
-    strings never cross the Python->JVM boundary; pinned identical to
-    the operator pipeline in test_dedup."""
+    strings never cross the Python->JVM boundary."""
     return dedup.minhash_signatures_docs(
         _t(spark, sf_dir, "documents"), n=3, text_col="text"
     )
@@ -230,10 +229,8 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 def q_simhash(spark, sf_dir):
     """60-bit SimHash per doc from term-count-weighted md5 term hashes —
     portable across engines (md5 + hex->int). r8: computed in ONE narrow
-    kernel from the raw docs (dedup.simhash_docs) — the postings form
-    paid a full repartition("doc_id") shuffle just to re-group rows the
-    tokenizer already had grouped; output pinned identical in
-    test_dedup."""
+    kernel from the raw docs (dedup.simhash_docs) — no repartition of
+    posting rows to re-group what the tokenizer already had grouped."""
     return dedup.simhash_docs(_t(spark, sf_dir, "documents"), text_col="text")
 
 

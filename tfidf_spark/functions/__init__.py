@@ -8,7 +8,6 @@ from tfidf_spark.functions.tokenize import (
 from tfidf_spark.functions.hashing import (
     doc_id_expr,
     content_sha256,
-    portable_min_hash_expr,
 )
 
 __all__ = [
@@ -19,5 +18,4 @@ __all__ = [
     "tokenize_counts_udf",
     "doc_id_expr",
     "content_sha256",
-    "portable_min_hash_expr",
 ]

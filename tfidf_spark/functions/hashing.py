@@ -7,18 +7,19 @@
 - ``content_sha256``: the per-row content-fidelity invariant
   (BASELINE.json input_hint), replacing the reference's salted md5 dedup
   key (reference: app/services/__init__.py:1-17).
-- ``shingle_hash_expr`` / ``seed_xor_constant``: the MinHash hash
-  family. Each shingle is md5-hashed ONCE into a 60-bit integer; the
-  per-seed permutations are XORs with md5-derived seed constants —
-  bijections on the hash space, so ``min(h(s) XOR k_seed)`` is a valid
-  MinHash component (the xor family is the standard cheap-permutation
-  choice in production LSH; xxhash-style seeded rehash costs another
-  full hash per seed for no extra independence in practice). An earlier
-  form computed ``md5(seed || shingle)`` per seed — 8 full md5 passes
-  over every shingle; at 10^12 documents the signature stage IS the md5
-  cost, so hash-once matters. Everything stays bit-identical across
-  Spark, DuckDB and Python (md5 + integer xor), keeping the signatures
-  oracle-checkable.
+- ``seed_xor_constant``: the MinHash hash family
+  (``operators.dedup.minhash_signatures_docs``). Each shingle is
+  md5-hashed ONCE into a 60-bit integer; the per-seed permutations are
+  XORs with md5-derived seed constants — bijections on the hash space,
+  so ``min(h(s) XOR k_seed)`` is a valid MinHash component (the xor
+  family is the standard cheap-permutation choice in production LSH;
+  xxhash-style seeded rehash costs another full hash per seed for no
+  extra independence in practice). An earlier form computed
+  ``md5(seed || shingle)`` per seed — 8 full md5 passes over every
+  shingle; at 10^12 documents the signature stage IS the md5 cost, so
+  hash-once matters. Everything stays bit-identical between the Spark
+  kernel, DuckDB and Python (md5 + integer xor), keeping the
+  signatures oracle-checkable.
 """
 
 from __future__ import annotations
@@ -40,30 +41,8 @@ def content_sha256(content_col: str | Column = "content") -> Column:
     return F.sha2(c, 256)
 
 
-def shingle_hash_expr(shingles_col: Column) -> Column:
-    """array<bigint>: 60-bit hash per shingle — md5 computed ONCE,
-    reused by every seed's permutation. 15 hex chars keep the value in
-    signed-int64 range for both Spark and DuckDB
-    (``('0x' || substr(md5(s), 1, 15))::BIGINT``)."""
-    return F.transform(
-        shingles_col,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
-
-
 def seed_xor_constant(seed: int) -> int:
     """60-bit xor-permutation constant for a seed: the same
     md5-of-decimal-string both engines compute
     (DuckDB: ``('0x' || substr(md5(seed::VARCHAR), 1, 15))::BIGINT``)."""
     return int(hashlib.md5(str(seed).encode()).hexdigest()[:15], 16)
-
-
-def portable_min_hash_expr(hashes_col: Column, seed: int) -> Column:
-    """min over pre-hashed shingles of ``h XOR k_seed`` — one MinHash
-    component as a bigint; NULL when the array is empty. Takes the
-    OUTPUT of ``shingle_hash_expr`` so the md5 work is shared across
-    seeds."""
-    k = seed_xor_constant(seed)
-    return F.array_min(
-        F.transform(hashes_col, lambda h: h.bitwiseXOR(F.lit(k)))
-    )

@@ -30,8 +30,10 @@ Scale design (the part that must survive 10^12 files):
 - BM25's idf-independent weight (cnt, dl, avgdl folded in) is computed
   JVM-side and stored per posting; its per-block max is the block-max
   skip metadata. Query-time score = idf * stored weight.
-- The index is written sorted by term within range partitions so parquet
-  min/max statistics prune term lookups.
+- ``term_postings`` files are hash-partitioned by (term, shard) and
+  sorted by ``xxhash64(term)`` inside each file, so a file's term
+  min/max spans nearly the whole vocabulary: term lookups get NO parquet
+  min/max pruning in this layout.
 
 The materialized tables are the scalable analog of the reference's
 ``word_frequencies`` B-tree'd table (reference app/db/models.py:94-110):
@@ -47,7 +49,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -261,52 +263,52 @@ def stage_postings(
     ).write.partitionBy("sec").mode("overwrite").parquet(f"{out_dir}/postings")
 
 
-def stage_encode(
-    raw: DataFrame,
-    out_dir: str,
-    avgdl: float,
-    n_shards: int,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> None:
-    """Stage 3: staged postings (``stage_postings`` output) -> compressed
-    per-(term, shard) runs at ``out_dir/term_postings``. Public so the
-    stage-scaling harness (tools/stage_scaling.py) times EXACTLY the
-    build's encode plan in isolation.
+def doc_shard(n_shards: int) -> Column:
+    """The shard of a ``doc_id`` row: every segment (build, incremental
+    delta, compaction) and the tombstone patcher share this assignment,
+    which keeps each shard's runs over one disjoint doc set."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
 
-    Hash-shuffle rows by (term, shard), Tungsten-sort each partition
-    by (term, shard, doc_id), and stream the sorted rows through the
-    Arrow encode kernel. The sort also leaves the written index
-    ordered by term within each file -> tight parquet min/max stats
-    for term pruning, with NO extra shuffle. (A repartitionByRange
-    would re-run the pipeline just to sample boundaries; a
-    collect_list aggregation was measured ~7x the cost of the entire
-    Python encode.)
-    Leading int64 hash key lets Tungsten radix-sort instead of
+
+def term_stats(runs: DataFrame) -> DataFrame:
+    """``(term, df, bytes)`` of a run table (``df_shard``/``n_bytes``
+    rows). Both are stored int columns, so the scan never touches the
+    posting blobs (parquet column pruning)."""
+    return runs.groupBy("term").agg(
+        F.sum("df_shard").alias("df"),
+        F.sum("n_bytes").alias("bytes"),
+    )
+
+
+def write_runs(rows: DataFrame, out_dir: str, n_shards: int) -> None:
+    """Weighted posting rows ``(term, doc_id, w)`` -> compressed
+    per-(term, shard) runs at ``out_dir/term_postings``: the build's,
+    ``compact_index``'s delta and ``full_compact``'s segments
+    (``patch_deletes`` re-encodes single runs in its own kernel).
+
+    Hash-shuffle rows by (term, shard), Tungsten-sort each partition by
+    (tkey, term, shard, doc_id) and stream the sorted rows through the
+    Arrow encode kernel. (A collect_list aggregation was measured ~7x
+    the cost of the entire Python encode.) The leading int64 key
+    ``tkey = xxhash64(term)`` lets Tungsten radix-sort instead of
     string-comparing terms (measured ~14% faster encode at 8 cores,
-    identical output); `term` stays in the order so hash collisions
-    still sort adjacent-but-separated and the kernel's boundary
-    detection on (term, shard) is unaffected. tkey is projected
-    AFTER the repartition so those 8 bytes/row never cross the
-    shuffle — it is recomputed reduce-side from `term`."""
-    spark = raw.sparkSession
-    postings = raw.filter(F.col("sec") == 0).withColumn(
-        "w", bm25_weight_expr("cnt", "dl", avgdl if avgdl > 0 else 1.0, k1, b)
-    )
-    sharded = postings.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
-    )
+    identical runs); `term` stays in the order so hash collisions still
+    sort adjacent-but-separated and the kernel's boundary detection on
+    (term, shard) is unaffected. tkey is projected AFTER the repartition
+    so those 8 bytes/row never cross the shuffle. The files come out in
+    tkey order, not term order (see the module docstring)."""
+    spark = rows.sparkSession
     sorted_runs = (
-        sharded.select("term", "shard", "doc_id", "w")
+        rows.select("term", doc_shard(n_shards).alias("shard"), "doc_id", "w")
         .repartition("term", "shard")
         .withColumn("tkey", F.xxhash64("term"))
         .sortWithinPartitions("tkey", "term", "shard", "doc_id")
         .drop("tkey")
     )
-    # big Arrow batches ONLY for this stage: posting rows are ~30B,
-    # so 100k rows/batch is a few MB and amortizes the kernel's
-    # per-batch overhead; the session default stays 10k because the
-    # same knob sizes text-carrying UDF batches (session.py)
+    # big Arrow batches ONLY for this job: posting rows are ~30B, so
+    # 100k rows/batch is a few MB and amortizes the kernel's per-batch
+    # overhead; the session default stays 10k because the same knob
+    # sizes text-carrying UDF batches (session.py)
     conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(conf_key, "10000")
     spark.conf.set(conf_key, "100000")
@@ -316,6 +318,27 @@ def stage_encode(
         ).write.mode("overwrite").parquet(f"{out_dir}/term_postings")
     finally:
         spark.conf.set(conf_key, prev)
+
+
+def stage_encode(
+    raw: DataFrame,
+    out_dir: str,
+    avgdl: float,
+    n_shards: int,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> None:
+    """Stage 3: staged postings (``stage_postings`` output) -> compressed
+    per-(term, shard) runs at ``out_dir/term_postings`` via
+    ``write_runs``. Public so the stage-scaling harness
+    (tools/stage_scaling.py) times EXACTLY the build's encode plan in
+    isolation."""
+    postings = raw.filter(F.col("sec") == 0).select(
+        "term",
+        "doc_id",
+        bm25_weight_expr("cnt", "dl", avgdl if avgdl > 0 else 1.0, k1, b).alias("w"),
+    )
+    write_runs(postings, out_dir, n_shards)
 
 
 def build_index(
@@ -413,12 +436,8 @@ def build_index(
 
     def _term_stats():
         # bytes ride along so the manifest totals come from the tiny
-        # term_stats table; n_bytes is a stored int column, so this scan
-        # never touches the posting blobs (parquet column pruning)
-        tp.groupBy("term").agg(
-            F.sum("df_shard").alias("df"),
-            F.sum("n_bytes").alias("bytes"),
-        ).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
+        # term_stats table
+        term_stats(tp).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
 
     ckpt.run("term_stats", _term_stats)
 
@@ -446,12 +465,11 @@ def build_index(
         # Iceberg-manifest pattern: the snapshot LISTS its data segments;
         # incremental merges append a delta segment without rewriting the
         # carried ones (see incremental.compact_index). A fresh build is
-        # a single-segment snapshot. Segments under the index root are
-        # stored RELATIVE (resolved against the manifest's directory at
-        # read time) so a copied/moved index stays self-contained;
-        # chained increments reference base segments absolutely and carry
-        # the usual Iceberg caveat: move the bases with the snapshot, or
-        # full_compact into a self-contained one.
+        # a single-segment snapshot. Segment refs are stored RELATIVE to
+        # the manifest's directory (resolved at read time) so a copied or
+        # moved index stays self-contained; chained increments reference
+        # their base segments as "../base/..." and move with them as a
+        # unit, or full_compact into a self-contained one.
         "segments": {
             "term_postings": ["term_postings"],
             "doc_stats": ["doc_stats"],
@@ -623,10 +641,11 @@ class IndexHandle:
         Two standard serving-tier moves, both scale-true:
 
         - ``term_postings`` and ``term_stats`` are persisted in executor
-          memory (MEMORY_AND_DISK — spills, never fails): repeated pruned
-          scans hit Spark's in-memory columnar cache, whose per-batch
-          min/max stats prune on the term-sorted layout, instead of
-          re-reading parquet footers + pages on every query.
+          memory (MEMORY_AND_DISK — spills, never fails): repeated term
+          scans hit Spark's in-memory columnar cache instead of
+          re-reading parquet footers + pages on every query (the runs
+          are not in term order, so its per-batch min/max stats prune
+          little).
         - the ``term -> df`` dictionary is collected driver-side when the
           vocabulary fits (``<= df_dict_max_terms`` rows) — the
           coordinator-resident term dictionary every search tier keeps in

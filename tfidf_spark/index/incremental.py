@@ -44,10 +44,51 @@ from tfidf_spark.index.builder import (
     FORMAT_VERSION,
     INDEX_SCHEMA,
     IndexHandle,
-    _encode_sorted_stream,
+    doc_shard,
+    term_stats,
+    write_runs,
 )
 from tfidf_spark.operators.postings import with_term_counts
 from tfidf_spark.operators.scoring import bm25_weight_expr
+
+
+def _carried_refs(index: IndexHandle, name: str, out_abs: str) -> list[str]:
+    """The base's ``name`` segments as refs relative to the new snapshot
+    directory ``out_abs`` (e.g. "../base/term_postings"): a chain of
+    snapshots under a common root then moves as a unit and every link
+    keeps resolving. abspath first, because segment_paths() output is
+    cwd-relative when the base was opened via a relative path — writing
+    that verbatim would re-resolve against the NEW snapshot's directory
+    (ADVICE r3)."""
+    return [
+        os.path.relpath(os.path.abspath(p), out_abs)
+        for p in index.segment_paths(name)
+    ]
+
+
+def _carried_shadow(index: IndexHandle, out_abs: str) -> DataFrame | None:
+    """The base's ``shadowed_runs`` (seg, term, shard) with its seg refs
+    remapped from base-relative to ``_carried_refs`` strings, or None.
+    A patched base's shadow list must travel with its carried segments,
+    or the runs a patch superseded would resurrect."""
+    base_shadow = index.shadowed_runs
+    if base_shadow is None:
+        return None
+    base_abs = os.path.abspath(index.path)
+    remap = index.spark.createDataFrame(
+        list(
+            zip(
+                _carried_refs(index, "term_postings", base_abs),
+                _carried_refs(index, "term_postings", out_abs),
+            )
+        ),
+        "old_ref string, new_ref string",
+    )
+    return (
+        base_shadow.withColumnRenamed("seg", "old_ref")
+        .join(F.broadcast(remap), "old_ref")
+        .select(F.col("new_ref").alias("seg"), "term", "shard")
+    )
 
 
 def decode_runs(term_postings: DataFrame) -> DataFrame:
@@ -115,13 +156,7 @@ def full_compact(index: IndexHandle, out_dir: str) -> dict:
     if ts is not None:
         rows = rows.join(ts, "doc_id", "left_anti")
         kept_stats = kept_stats.join(ts, "doc_id", "left_anti")
-    (
-        rows.repartition("term", "shard")
-        .sortWithinPartitions("term", "shard", "doc_id")
-        .mapInPandas(_encode_sorted_stream, INDEX_SCHEMA)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/term_postings")
-    )
+    write_runs(rows, out_dir, index.manifest["n_shards"])
     kept_stats.write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
     kept = spark.read.parquet(f"{out_dir}/doc_stats").agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl_sum")
@@ -129,10 +164,7 @@ def full_compact(index: IndexHandle, out_dir: str) -> dict:
     n_docs = int(kept["n"])
 
     tp = spark.read.parquet(f"{out_dir}/term_postings")
-    tp.groupBy("term").agg(
-        F.sum("df_shard").alias("df"),
-        F.sum("n_bytes").alias("bytes"),
-    ).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
+    term_stats(tp).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
 
     dl_sum = float(kept["dl_sum"] or 0.0)
     snap_stats = tp.agg(
@@ -205,8 +237,8 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
 
     Mechanics (Lucene-style patch segment + shadow list):
       1. tombstoned doc_ids can only live in runs of their own shard
-         (shard = pmod(xxhash64(doc_id), n_shards)), so only those
-         shards' runs are even scanned;
+         (``builder.doc_shard``), so only those shards' runs are even
+         scanned;
       2. per candidate run, the block-max skip index localizes each
          deleted id to ONE block (searchsorted over block_last) — a run
          is rejected after decoding just the candidate blocks, so decode
@@ -260,11 +292,7 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     del_u = np.sort(to_unsigned(del_ids))
     affected_shards = [
         r["shard"]
-        for r in ts.select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard")
-        )
-        .distinct()
-        .collect()
+        for r in ts.select(doc_shard(n_shards).alias("shard")).distinct().collect()
     ]
 
     # n_docs/dl_sum are computed ABSOLUTELY (live docs = doc_stats
@@ -281,10 +309,9 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     n_docs_live = int(kept["n"])
     dl_sum_live = float(kept["dl"] or 0.0)
 
-    # carried segment refs, relative to the new snapshot (same scheme as
-    # compact_index); the reader keys shadow rows by these ref strings
-    seg_abs = [os.path.abspath(p) for p in index.segment_paths("term_postings")]
-    seg_refs = [os.path.relpath(p, out_abs) for p in seg_abs]
+    # carried segment refs, relative to the new snapshot; the reader
+    # keys shadow rows by these ref strings
+    seg_refs = _carried_refs(index, "term_postings", out_abs)
 
     def _patch(batches):
         for pdf in batches:
@@ -340,39 +367,20 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     # read carried segments ref-tagged, with the base's OWN shadow list
     # (if it is already a patched snapshot) applied so dead runs are
     # neither re-patched nor resurrected
-    parts = []
-    for ref, p in zip(seg_refs, seg_abs):
-        parts.append(spark.read.parquet(p).withColumn("_seg", F.lit(ref)))
+    parts = [
+        spark.read.parquet(p).withColumn("_seg", F.lit(ref))
+        for ref, p in zip(seg_refs, index.segment_paths("term_postings"))
+    ]
     tagged = parts[0]
     for df in parts[1:]:
         tagged = tagged.unionByName(df)
-    base_shadow = index.shadowed_runs
-    if base_shadow is not None:
-        # base shadow seg refs are relative to the BASE snapshot: remap to
-        # this snapshot's ref strings via the tiny (old_ref -> new_ref) map
-        remap = spark.createDataFrame(
-            [
-                (os.path.relpath(a, os.path.abspath(index.path)), ref)
-                for a, ref in zip(seg_abs, seg_refs)
-            ],
-            "old_ref string, _seg string",
-        )
-        shadow_remapped = (
-            base_shadow.withColumnRenamed("seg", "old_ref")
-            .join(F.broadcast(remap), "old_ref")
-            .select(F.col("_seg").alias("seg"), "term", "shard")
-        )
+    shadow_remapped = _carried_shadow(index, out_abs)
+    if shadow_remapped is not None:
         tagged = tagged.join(
-            F.broadcast(
-                shadow_remapped.select(
-                    F.col("seg").alias("_seg"), "term", "shard"
-                )
-            ),
+            F.broadcast(shadow_remapped.withColumnRenamed("seg", "_seg")),
             ["_seg", "term", "shard"],
             "left_anti",
         )
-    else:
-        shadow_remapped = None
 
     schema = (
         "term string, shard int, df_shard long, postings binary, "
@@ -443,10 +451,6 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     )
     patched.unpersist()
 
-    doc_refs = [
-        os.path.relpath(os.path.abspath(p), out_abs)
-        for p in index.segment_paths("doc_stats")
-    ]
     manifest = dict(index.manifest)
     manifest.update(
         {
@@ -455,7 +459,7 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
             "dl_sum": dl_sum_live,
             "segments": {
                 "term_postings": seg_refs + own_ref,
-                "doc_stats": doc_refs,
+                "doc_stats": _carried_refs(index, "doc_stats", out_abs),
             },
             "shadowed_runs": has_shadow,
             # the query path's top-k over-fetch only needs to cover
@@ -531,8 +535,11 @@ def compact_index(
     delta_stats = delta.groupBy("doc_id").agg(
         F.max("dl").alias("dl"), F.count("term").alias("n_unique")
     )
-    n_new = delta_stats.count()
-    new_dl_sum = delta_stats.agg(F.sum("dl")).collect()[0][0] or 0
+    counts = delta_stats.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl")
+    ).collect()[0]
+    n_new = int(counts["n"])
+    new_dl_sum = counts["dl"] or 0
 
     # Re-ingest guard (the reference rejects duplicate uploads by hash,
     # app/controllers/document.py:150-156): a doc_id already in the base
@@ -566,35 +573,25 @@ def compact_index(
             f"{rebuild_threshold}: schedule a full rebuild (or force=True)"
         )
 
-    delta_posts = (
-        delta.filter(F.col("term").isNotNull())
-        .withColumn("w", bm25_weight_expr("cnt", "dl", pinned_avgdl, k1, b))
-        .withColumn("shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int"))
-        .select("term", "shard", "doc_id", "w")
+    delta_posts = delta.filter(F.col("term").isNotNull()).select(
+        "term",
+        "doc_id",
+        bm25_weight_expr("cnt", "dl", pinned_avgdl, k1, b).alias("w"),
     )
-    (
-        delta_posts.repartition("term", "shard")
-        .sortWithinPartitions("term", "shard", "doc_id")
-        .mapInPandas(_encode_sorted_stream, INDEX_SCHEMA)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/term_postings")
-    )
+    write_runs(delta_posts, out_dir, n_shards)
     delta_stats.write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
 
     # term_stats must stay one-row-per-term (the query-side idf join
-    # broadcasts it), so it is re-aggregated: base stats ∪ the delta
-    # segment's per-term sums. O(vocabulary) rows; n_bytes/df_shard are
-    # stored int columns, so neither scan touches a posting blob.
+    # broadcasts it), so it is re-aggregated over the delta segment's
+    # runs ∪ the base stats, each base row standing for all of its
+    # term's base runs. O(vocabulary + delta runs) rows.
     seg = spark.read.parquet(f"{out_dir}/term_postings")
-    delta_ts = seg.groupBy("term").agg(
-        F.sum("df_shard").alias("df"), F.sum("n_bytes").alias("bytes")
+    base_runs = index.term_stats.select(
+        "term", F.col("df").alias("df_shard"), F.col("bytes").alias("n_bytes")
     )
-    merged_ts = (
-        index.term_stats.unionByName(delta_ts)
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("bytes").alias("bytes"))
-    )
-    merged_ts.write.mode("overwrite").parquet(f"{out_dir}/term_stats")
+    term_stats(base_runs.unionByName(seg.select(*base_runs.columns))).write.mode(
+        "overwrite"
+    ).parquet(f"{out_dir}/term_stats")
 
     # carry tombstones forward: the merged snapshot must keep filtering
     # docs deleted from the base, or they silently reappear in results.
@@ -602,50 +599,14 @@ def compact_index(
     if n_carried:
         index.tombstones.write.mode("overwrite").parquet(f"{out_dir}/tombstones")
 
-    # Carried base segments are stored RELATIVE TO THIS SNAPSHOT's
-    # directory (e.g. "../base/term_postings"): a chain of snapshots under
-    # a common root can then be moved/renamed as a unit and every link
-    # keeps resolving. abspath first, because segment_paths() output is
-    # cwd-relative when the base index was opened via a relative path —
-    # writing that verbatim would re-resolve against the NEW snapshot's
-    # directory and break (ADVICE r3). Computed BEFORE the shadow-remap
-    # block below, which zips against these refs (ADVICE r4: referencing
-    # it later raised UnboundLocalError on every patched base).
     out_abs = os.path.abspath(out_dir)
     base_segs = {
-        name: [
-            os.path.relpath(os.path.abspath(p), out_abs)
-            for p in index.segment_paths(name)
-        ]
+        name: _carried_refs(index, name, out_abs)
         for name in ("term_postings", "doc_stats")
     }
-
-    # a patched base's shadow list must travel with its carried segments,
-    # or the runs a patch superseded would resurrect in the merged view;
-    # seg refs are remapped from base-relative to this snapshot's refs.
-    base_shadow = index.shadowed_runs
-    if base_shadow is not None:
-        base_abs = os.path.abspath(index.path)
-        remap = spark.createDataFrame(
-            [
-                (
-                    os.path.relpath(os.path.abspath(p), base_abs),
-                    new_ref,
-                )
-                for p, new_ref in zip(
-                    index.segment_paths("term_postings"),
-                    base_segs["term_postings"],
-                )
-            ],
-            "old_ref string, new_ref string",
-        )
-        (
-            base_shadow.withColumnRenamed("seg", "old_ref")
-            .join(F.broadcast(remap), "old_ref")
-            .select(F.col("new_ref").alias("seg"), "term", "shard")
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/shadowed_runs")
-        )
+    shadow = _carried_shadow(index, out_abs)
+    if shadow is not None:
+        shadow.write.mode("overwrite").parquet(f"{out_dir}/shadowed_runs")
 
     delta_bytes = (
         seg.agg(

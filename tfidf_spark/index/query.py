@@ -154,7 +154,7 @@ def _topk(runs: list[_Run], terms: list[str], k: int):
     """Exact top-k ``(doc_ids, scores)`` over ``runs`` for the query-term
     occurrence list ``terms``, ordered score-desc, doc_id-asc."""
     lists = [r for r in runs if r.n_blocks]
-    if not lists:
+    if not lists or k <= 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     # single-run query (e.g. a lone stop-like term): the ranking is
     # determined by the weights buffer alone, which is a raw float64 read
@@ -307,11 +307,15 @@ def bm25_query_index(
     Returns ``(query_id, doc_id, score, rank)``, rank 1..k per query,
     ordered by the deterministic tie-break.
 
-    ``prune_by_collect``: collect the distinct query terms driver-side and
-    push an IN-filter into the index scan — with the index sorted by term,
-    parquet min/max stats skip non-matching row groups (the analog of the
-    reference's B-tree probe on word, app/db/models.py:100). For huge query
-    batches set False to use a shuffle join instead.
+    ``prune_by_collect``: collect the query rows driver-side and push an
+    IN-filter on their distinct terms into the index scan. The filter
+    drops non-matching runs before the join, but parquet min/max stats
+    prune (almost) no row group: runs are stored in ``xxhash64(term)``
+    order (builder.write_runs).
+    ``False`` keeps the batch distributed (no collect, no IN-filter), but
+    the (query, term) table is still BROADCAST into the postings join,
+    so a batch too large to collect is also shipped whole to every
+    executor.
     """
     spark = queries.sparkSession
     # One row per (query, distinct term); the query's whole ``terms``
@@ -426,7 +430,7 @@ def bm25_query_terms_local(
     returns identical results — the executors decode, the driver only
     sees k rows.
     """
-    if not terms:
+    if not terms or k <= 0:
         return []
     distinct = sorted(set(terms))
     df_dict = getattr(index, "_df_dict", None)

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tfidf_spark.functions.hashing import portable_min_hash_expr, shingle_hash_expr
 from tfidf_spark.functions.tokenize import shingles_udf
 
 
@@ -52,47 +51,6 @@ def doc_shingles(
     )
 
 
-def doc_shingle_arrays(
-    docs: DataFrame, n: int = 3, text_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, shingles array<string>): un-exploded shingle sets — the
-    input shape for the zero-shuffle MinHash below."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles_udf(n)(F.col(text_col)).alias("shingles"),
-    )
-
-
-def minhash_signatures(shingle_arrays: DataFrame, n_seeds: int = 8) -> DataFrame:
-    """(doc_id, seed, minhash): hash-once xor-permuted MinHash (bigint),
-    portable across engines (functions/hashing.py).
-
-    Input: ``doc_shingle_arrays`` output (doc_id, shingles array).
-    ZERO-shuffle plan: shingles are md5-hashed ONCE into an int array
-    (``hs``); each seed's component is ``array_min(hs XOR k_seed)`` —
-    cheap integer work per extra seed, not another md5 pass. The wide
-    row then unpivots via ``stack`` — no crossJoin row inflation, no
-    groupBy. Catalyst keeps the shared ``hs`` projection un-inlined
-    because it is non-cheap and referenced n_seeds times (asserted by
-    the single-md5 plan test, tests/test_plans.py). Docs with no
-    shingles (< n tokens) produce no rows, matching the exploded form."""
-    hashed = shingle_arrays.select(
-        "doc_id", shingle_hash_expr(F.col("shingles")).alias("hs")
-    )
-    mins = [
-        portable_min_hash_expr(F.col("hs"), s).alias(f"m{s}")
-        for s in range(n_seeds)
-    ]
-    wide = hashed.select("doc_id", *mins)
-    stack = ", ".join(f"{s}, m{s}" for s in range(n_seeds))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({n_seeds}, {stack})").alias("seed", "minhash"),
-    ).select(
-        "doc_id", F.col("seed").cast("int").alias("seed"), "minhash"
-    ).filter(F.col("minhash").isNotNull())
-
-
 def minhash_signatures_docs(
     docs: DataFrame,
     n: int = 3,
@@ -101,16 +59,16 @@ def minhash_signatures_docs(
     n_seeds: int = 8,
     code_aware: bool = False,
 ) -> DataFrame:
-    """(doc_id, seed, minhash) straight from the documents in ONE narrow
-    kernel — tokenize, shingle, md5, xor-min all per batch, no Arrow
-    transfer of the shingle strings back to the JVM and no second UDF
-    subtree (r8; the ``doc_shingle_arrays`` -> ``minhash_signatures``
-    pipeline shipped every distinct shingle string across the Python
-    boundary just to md5 it JVM-side). Hash semantics identical to
-    ``shingle_hash_expr``/``portable_min_hash_expr``:
-    ``int(md5(s)[:15 hex], 16)`` xor the md5-derived seed constants,
-    min per doc — pinned against the operator form in test_dedup.
-    Docs with < n tokens emit no rows (same as the exploded form)."""
+    """(doc_id, seed, minhash): hash-once xor-permuted MinHash (bigint)
+    straight from the documents in ONE narrow kernel — tokenize,
+    shingle, md5, xor-min all per batch, zero shuffle, and the shingle
+    strings never cross the Python->JVM boundary. Each distinct word
+    n-gram shingle is hashed ONCE, ``h = int(md5(s)[:15 hex], 16)``;
+    seed ``s``'s component is ``min(h XOR seed_xor_constant(s))`` over
+    the doc's shingles (functions/hashing.py) — the same values as the
+    DuckDB oracle over the exploded shingle rows, and pinned against a
+    pure-Python recomputation in test_dedup. Docs with < n tokens emit
+    no rows."""
     import hashlib
 
     from tfidf_spark.functions.hashing import seed_xor_constant
@@ -294,106 +252,6 @@ def jaccard_pairs(
     return jac
 
 
-def simhash(postings: DataFrame, bits: int = 60) -> DataFrame:
-    """(doc_id, simhash): count-weighted SimHash over md5 term hashes.
-    Input: (doc_id, term, cnt) posting rows.
-
-    Plan: ONE shuffle of the raw posting rows (repartition by doc_id +
-    Tungsten sort) into a boundary-carrying Arrow kernel that computes
-    all ``bits`` bit-sums vectorized in numpy (the encode-stage pattern,
-    index/builder._encode_sorted_stream). Three shapes were measured
-    as interleaved-round medians at sf0.1 (numbers live in
-    BENCH/QUERY_MEDIANS.json, kept out of this docstring because the
-    host's absolute timings drift 2x day to day):
-
-    - 60x bit-row explode + two shuffles: lowest local wall time, but it
-      shuffles 60x the posting table — at 10^12 files that inflation IS
-      the job; rejected on plan shape regardless of local stopwatch.
-    - single groupBy with 60 conditional sums: right shuffle shape but
-      consistently ~2x slower than this kernel — 60 codegen'd
-      when-branches per input row are CPU-bound.
-    - this kernel: same single-shuffle shape, bit-matrix + reduceat in
-      numpy — the fastest form that keeps shuffle volume = input size.
-    """
-    p = postings.withColumn(
-        "h", F.expr("cast(conv(substring(md5(term), 1, 15), 16, 10) as bigint)")
-    )
-    rows = (
-        p.select("doc_id", "cnt", "h")
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        out_shifts = np.arange(bits, dtype=np.int64)
-        # group-aligned slice size: caps the (rows x bits) working set at
-        # a few MB so the kernel stays cache-resident instead of streaming
-        # ~100 MB of int64 temporaries per 100k-row Arrow batch (measured
-        # 2-3x slower under host memory-bandwidth contention)
-        slice_rows = 16384
-
-        def flush(ids, cnts, hs):
-            change = np.empty(ids.size, dtype=bool)
-            change[0] = True
-            change[1:] = ids[1:] != ids[:-1]
-            starts = np.flatnonzero(change)
-            # bit matrix via unpackbits on the little-endian byte view:
-            # (rows, bits) uint8 where column i == (h >> i) & 1
-            byte_view = hs.astype("<u8").view(np.uint8).reshape(-1, 8)
-            # int32 is safe: per-group sums are bounded by the doc's
-            # token count, and a doc's text is ONE Spark string value
-            # (hard 2 GB limit) -> dl < 2^31 always; int32 halves the
-            # kernel's memory traffic vs int64
-            cnts32 = cnts.astype(np.int32)
-            sims = np.empty(starts.size, dtype=np.int64)
-            g = 0  # group cursor
-            while g < starts.size:
-                # extend the slice to the last group boundary <= g+rows
-                g_end = int(
-                    np.searchsorted(starts, starts[g] + slice_rows, side="left")
-                )
-                g_end = max(g + 1, min(g_end, starts.size))
-                r0 = starts[g]
-                r1 = starts[g_end] if g_end < starts.size else ids.size
-                bitm = np.unpackbits(
-                    byte_view[r0:r1], axis=1, bitorder="little"
-                )[:, :bits].astype(np.int32)
-                # contrib = cnt where bit set else -cnt == (2*bit-1)*cnt
-                contrib = (2 * bitm - 1) * cnts32[r0:r1, None]
-                sums = np.add.reduceat(contrib, starts[g:g_end] - r0, axis=0)
-                sims[g:g_end] = (
-                    (sums > 0).astype(np.int64) << out_shifts
-                ).sum(axis=1)
-                g = g_end
-            return pd.DataFrame({"doc_id": ids[starts], "simhash": sims})
-
-        pend = None  # (ids, cnts, hs) tail group carried across batches
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            cnts = pdf["cnt"].to_numpy(dtype=np.int64)
-            hs = pdf["h"].to_numpy(dtype=np.int64)
-            if pend is not None:
-                ids = np.concatenate([pend[0], ids])
-                cnts = np.concatenate([pend[1], cnts])
-                hs = np.concatenate([pend[2], hs])
-                pend = None
-            # hold the last doc's rows: it may continue in the next batch
-            cut = np.flatnonzero(ids != ids[-1])
-            tail_start = cut[-1] + 1 if cut.size else 0
-            pend = (ids[tail_start:], cnts[tail_start:], hs[tail_start:])
-            if tail_start:
-                yield flush(ids[:tail_start], cnts[:tail_start], hs[:tail_start])
-        if pend is not None and pend[0].size:
-            yield flush(*pend)
-
-    return rows.mapInPandas(kernel, "doc_id long, simhash long")
-
-
 def simhash_docs(
     docs: DataFrame,
     text_col: str = "content",
@@ -403,16 +261,19 @@ def simhash_docs(
 ) -> DataFrame:
     """(doc_id, simhash) straight from the documents — ZERO shuffle.
 
-    A document's SimHash depends only on its own (term, cnt) pairs, so
-    tokenize + count + md5 + bit-sum all run in ONE narrow Arrow kernel
-    per doc batch. The postings-input form (``simhash``) pays a full
-    repartition("doc_id") of the exploded posting rows just to
-    re-group what the tokenizer already had grouped; this form is the
-    r8 replacement for that plan when the caller starts from raw docs
-    (identical output — pinned against ``simhash`` in test_dedup).
-    md5 semantics match the JVM expression exactly:
-    ``int(md5(term)[:15 hex], 16)`` == conv(substring(md5(term),1,15),
-    16,10) — 60 bits, positive, exact integer math throughout."""
+    Count-weighted SimHash over md5 term hashes: bit ``i`` is set when
+    the doc's term counts, each signed by bit ``i`` of its term's hash,
+    sum above zero. A document's SimHash depends only on its own
+    (term, cnt) pairs, so tokenize + count + md5 + bit-sum all run in
+    ONE narrow Arrow kernel per doc batch — no repartition of exploded
+    posting rows to re-group what the tokenizer already had grouped.
+    The bit sums are vectorized in numpy (a bit matrix + reduceat); the
+    rejected shapes were a 60x bit-row explode, which shuffles 60x the
+    posting table, and a groupBy with 60 conditional sums, ~2x slower
+    and CPU-bound. md5 semantics match the DuckDB oracle exactly:
+    ``int(md5(term)[:15 hex], 16)`` — 60 bits, positive, exact integer
+    math throughout (pinned against a pure-Python SimHash in
+    test_dedup). Zero-token docs emit no row."""
     import hashlib
 
     from tfidf_spark.functions.tokenize import _tokenize_series
@@ -427,7 +288,11 @@ def simhash_docs(
 
         out_shifts = np.arange(bits, dtype=np.int64)
         md5_cache: dict[str, int] = {}
-        slice_rows = 16384  # same cache-residency cap as `simhash`
+        # group-aligned slice size: caps the (rows x bits) working set at
+        # a few MB so the kernel stays cache-resident instead of streaming
+        # ~100 MB of int64 temporaries per 100k-row Arrow batch (measured
+        # 2-3x slower under host memory-bandwidth contention)
+        slice_rows = 16384
 
         for pdf in batches:
             if not len(pdf):

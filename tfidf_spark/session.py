@@ -47,7 +47,7 @@ def get_spark(
         # Python worker. The posting-encode stage, whose ~30B rows DO
         # want big batches (per-batch kernel overhead measured material
         # at 10k on 28M-row streams), raises it to 100k around its own
-        # job only (index/builder._encode).
+        # job only (index/builder.write_runs).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         # InferFiltersFromGenerate infers size(term_counts)>0 below the
