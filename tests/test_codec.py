@@ -12,7 +12,7 @@ from tfidf_spark.index.codec import (
     decode_block,
     decode_postings,
     encode_postings,
-    merge_encoded_runs,
+    encode_runs,
     to_signed,
     to_unsigned,
     varint_decode,
@@ -97,21 +97,72 @@ def test_huge_gaps():
     assert np.array_equal(got_ids, ids)
 
 
-def test_merge_encoded_runs():
-    rng = np.random.default_rng(7)
-    all_ids = rng.choice(2**40, size=500, replace=False).astype(np.int64) - 2**39
-    w = rng.random(500)
+@settings(max_examples=60, deadline=None)
+@given(
+    sizes=st.lists(
+        st.sampled_from([1, 127, 128, 129]) | st.integers(1, 300),
+        min_size=1,
+        max_size=6,
+    ),
+    seed=st.integers(0, 2**32 - 1),
+    wide=st.booleans(),
+)
+def test_encode_runs_matches_one_run_calls(sizes, seed, wide):
+    """Back-to-back runs encoded in one call give, per run, exactly the
+    tuple a one-run call gives, and every run decodes (whole and per
+    block) to its own ids and weights."""
+    rng = np.random.default_rng(seed)
+    gmax = 2**54 if wide else 3  # wide gaps need multi-byte varints
     runs = []
-    for part in range(4):
-        sel = np.arange(500) % 4 == part
-        pb, wb, *_ = encode_postings(all_ids[sel], w[sel])
-        runs.append((pb, wb))
-    pb, wb, block_last, block_max, block_off, n = merge_encoded_runs(runs)
-    got_ids, got_w = decode_postings(pb, wb)
-    order = np.argsort(to_unsigned(all_ids), kind="stable")
-    assert n == 500
-    assert np.array_equal(got_ids, all_ids[order])
-    assert np.allclose(got_w, w[order])
+    for n in sizes:
+        gaps = rng.integers(1, gmax, size=n, dtype=np.int64)
+        ids = -(gmax * n // 2) + np.cumsum(gaps)  # mixed sign, ascending
+        runs.append((ids, rng.random(n)))
+    starts = np.cumsum([0] + sizes[:-1])
+    multi = list(
+        encode_runs(
+            np.concatenate([r[0] for r in runs]),
+            np.concatenate([r[1] for r in runs]),
+            starts,
+        )
+    )
+    assert len(multi) == len(runs)
+    for (ids, w), got in zip(runs, multi):
+        assert got == next(encode_runs(ids, w, [0]))
+        pb, wb, block_last, _, block_off, n = got
+        assert n == ids.size
+        got_ids, got_w = decode_postings(pb, wb)
+        assert np.array_equal(got_ids, ids)
+        assert np.array_equal(got_w, w)
+        for i in range(len(block_off)):
+            b_ids, b_w = decode_block(pb, wb, block_last, block_off, i)
+            lo, hi = i * BLOCK_SIZE, min((i + 1) * BLOCK_SIZE, n)
+            assert np.array_equal(b_ids, ids[lo:hi])
+            assert np.array_equal(b_w, w[lo:hi])
+
+
+def test_format_v3_literal_bytes():
+    """Pins the on-disk encoding: a change to the gap, varint or block
+    metadata layout must fail here (and bump FORMAT_VERSION)."""
+    ids = np.array([300, -2, -1, 126, 254, 16638], dtype=np.int64)
+    w = np.array([0.5, 1.5, 0.25, 2.0, 1.0, 0.75])
+    pb, wb, block_last, block_max, block_off, n = encode_postings(ids, w)
+    # sign-flipped -2 (9 bytes), then gaps 1, 127, 128, 46, 16338
+    assert pb.hex() == "feffffffffffffff7f" "01" "7f" "8001" "2e" "d27f"
+    assert wb == np.array([1.5, 0.25, 2.0, 1.0, 0.5, 0.75], "<f8").tobytes()
+    assert (block_last, block_max, block_off, n) == ([16638], [2.0], [0], 6)
+
+    # two blocks: block 1's offset skips block 0's 9 + 127 bytes
+    pb, wb, block_last, block_max, block_off, n = encode_postings(
+        np.arange(-65, 65, dtype=np.int64), np.arange(130) / 8.0
+    )
+    assert pb.hex() == "bfffffffffffffff7f" + "01" * 129
+    assert (block_last, block_max, block_off, n) == (
+        [62, 64],
+        [15.875, 16.125],
+        [0, 136],
+        130,
+    )
 
 
 def test_compression_actually_compresses():

@@ -247,3 +247,55 @@ def test_repatch_keeps_absolute_doc_stats(spark, corpus, tmp_path):
         fr = [(r["doc_id"], round(r["score"], 9))
               for r in bm25_query_terms(load_index(spark, fc), terms, k=10).collect()]
         assert pr == fr, terms
+
+
+def test_patch_deletes_on_multi_segment_base(spark, corpus, tmp_path):
+    """patch_deletes on a compact_index'ed (two-segment) base, with
+    victims in both segments: hit runs of one (term, shard) from the
+    base and the delta segment are rewritten together, and the result
+    is score-identical to full_compact's."""
+    from tfidf_spark.index.incremental import (
+        compact_index,
+        decode_runs,
+        full_compact,
+        patch_deletes,
+    )
+
+    s0, s1 = str(tmp_path / "m0"), str(tmp_path / "m1")
+    build_index(corpus.filter(F.col("doc_id") % 4 != 0), s0, n_shards=4)
+    compact_index(
+        load_index(spark, s0), corpus.filter(F.col("doc_id") % 4 == 0), s1,
+        force=True,
+    )
+    idx = load_index(spark, s1)
+    assert len(idx.segment_paths("term_postings")) == 2
+    victims = [r["doc_id"] for r in bm25_query_terms(idx, ["w1"], k=24).collect()]
+    assert {v % 4 == 0 for v in victims} == {True, False}, "victims in one segment"
+    delete_docs(idx, victims)
+
+    full_dir, patch_dir = str(tmp_path / "mfc"), str(tmp_path / "mpd")
+    fm = full_compact(load_index(spark, s1), full_dir)
+    pm = patch_deletes(load_index(spark, s1), patch_dir)
+    assert pm["n_docs"] == fm["n_docs"] == 100 - len(victims)
+
+    pidx, fidx = load_index(spark, patch_dir), load_index(spark, full_dir)
+    # non-vacuity: some (term, shard) had hit runs in both segments
+    shadow = pidx.shadowed_runs.groupBy("term", "shard").agg(
+        F.countDistinct("seg").alias("segs")
+    )
+    assert shadow.filter(F.col("segs") == 2).count() > 0
+
+    p_ts = {r["term"]: r["df"] for r in pidx.term_stats.collect()}
+    f_ts = {r["term"]: r["df"] for r in fidx.term_stats.collect()}
+    assert p_ts == f_ts
+    remaining = {
+        r["doc_id"]
+        for r in decode_runs(pidx.term_postings).select("doc_id").distinct().collect()
+    }
+    assert not (set(victims) & remaining)
+    for terms in (["w1"], ["w0", "w1"], ["w1", "w2", "w1"], ["w3", "w7"]):
+        pr = [(r["doc_id"], r["score"])
+              for r in bm25_query_terms(pidx, terms, k=20).collect()]
+        fr = [(r["doc_id"], r["score"])
+              for r in bm25_query_terms(fidx, terms, k=20).collect()]
+        assert pr and pr == fr, terms

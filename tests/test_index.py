@@ -10,10 +10,13 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tfidf_spark.index.builder import build_index, load_index
+from tfidf_spark.index.builder import _encode_sorted_stream, build_index, load_index
 from tfidf_spark.index.codec import decode_postings
 from tfidf_spark.index.query import bm25_query_index, bm25_query_terms
 from tfidf_spark.operators.postings import build_postings, doc_stats, corpus_stats, term_df
@@ -25,6 +28,31 @@ def tiny_index(tmp_path_factory, tiny_corpus):
     out = str(tmp_path_factory.mktemp("idx"))
     manifest = build_index(tiny_corpus, out, n_shards=2)
     return out, manifest
+
+
+@settings(max_examples=50, deadline=None)
+@given(
+    runs=st.lists(st.tuples(st.sampled_from("abc"), st.integers(0, 2)), min_size=1),
+    sizes=st.lists(st.integers(1, 140), min_size=1),
+    cuts=st.lists(st.integers(0, 10_000), max_size=6),
+)
+def test_encode_stream_independent_of_batch_cuts(runs, sizes, cuts):
+    """The encode kernel gives the same runs however the sorted stream
+    is cut into Arrow batches (empty batches and runs spanning several
+    batches included): the slicer carries incomplete groups."""
+    keys = sorted(set(runs))
+    rows = [
+        (t, s, d, (d % 5) / 4.0)
+        for i, (t, s) in enumerate(keys)
+        for d in range(-3, sizes[i % len(sizes)] - 3)
+    ]
+    pdf = pd.DataFrame(rows, columns=["term", "shard", "doc_id", "w"])
+    cut_at = sorted({c % (len(pdf) + 1) for c in cuts})
+    batches = [pdf.iloc[a:b] for a, b in zip([0] + cut_at, cut_at + [len(pdf)])]
+    whole = pd.concat(list(_encode_sorted_stream(iter([pdf]))), ignore_index=True)
+    split = pd.concat(list(_encode_sorted_stream(iter(batches))), ignore_index=True)
+    assert list(zip(whole["term"], whole["shard"])) == keys
+    assert whole.to_dict("list") == split.to_dict("list")
 
 
 def test_manifest_and_metrics(tiny_index, tiny_corpus):

@@ -83,6 +83,18 @@ _TWO_RUNS = _ONE_RUN + [("b", 2.0, np.array([2, 4]), np.array([0.3, 0.1]))]
 # k = 0 on the one-run branch and on the MaxScore branch: no rows
 @example((_ONE_RUN, ["a"]), 0)
 @example((_TWO_RUNS, ["a", "b"]), 0)
+# subnormal idf: the bound (2·idf)·w rounds one subnormal ulp below the
+# tied exact score idf·w + idf·w, which a relative slack cannot cover
+@example(
+    (
+        [
+            ("t0", 5e-324, np.array([-6, -5]), np.array([0.68696169, 0.68696169])),
+            ("t0", 5e-324, np.array([-10, -2]), np.array([0.68696169, 0.68696169])),
+        ],
+        ["t0", "t0"],
+    ),
+    1,
+)
 def test_kernel_matches_oracle_fold(query, k):
     runs, terms = query
     _check(runs, terms, k)

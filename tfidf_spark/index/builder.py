@@ -63,7 +63,7 @@ from pyspark.sql.types import (
 )
 
 from tfidf_spark import BM25_B, BM25_K1
-from tfidf_spark.index.codec import BLOCK_SIZE, _THRESHOLDS, to_unsigned
+from tfidf_spark.index.codec import encode_runs
 from tfidf_spark.operators.postings import with_term_counts
 from tfidf_spark.operators.scoring import bm25_weight_expr
 
@@ -91,105 +91,19 @@ INDEX_SCHEMA = StructType(
 )
 
 
-def _encode_group_arrays(
-    g_terms: np.ndarray,
-    g_shards: np.ndarray,
-    ids: np.ndarray,
-    ws: np.ndarray,
-    starts: np.ndarray,
-    end: int,
-) -> pd.DataFrame:
-    """Vectorized multi-group encode core (r8): one delta/varint pass
-    over the WHOLE sorted slice instead of one ``encode_postings`` call
-    per (term, shard) run. At vocab x n_shards groups per build (~80k at
-    bench scale, unbounded at corpus scale) the per-call numpy overhead
-    dominated the encode stage — this is ~25x faster on the same input
-    and byte-identical (the per-group codec math is unchanged: gaps
-    reset at group starts, blocks are 128-row slices within each group,
-    block_off is relative to the group's first varint byte).
-
-    ``ids``/``ws`` must already be truncated to ``end`` rows holding
-    complete groups that start at ``starts`` and are sorted by signed
-    doc_id within each group (codec sign-flip identity); ``g_terms`` /
-    ``g_shards`` carry ONE value per group (aligned with ``starts``)."""
-    starts = np.asarray(starts, dtype=np.int64)
-    bounds = np.append(starts, end)
-    u = to_unsigned(ids)
-    gaps = np.empty_like(u)
-    gaps[1:] = u[1:] - u[:-1]
-    gaps[starts] = u[starts]
-    nb = np.ones(gaps.size, dtype=np.int64)
-    for t in _THRESHOLDS:
-        nb += (gaps >= t).astype(np.int64)
-    byte_off = np.zeros(gaps.size + 1, dtype=np.int64)
-    np.cumsum(nb, out=byte_off[1:])
-    enc = np.zeros(int(byte_off[-1]), dtype=np.uint8)
-    offsets = byte_off[:-1]
-    for j in range(10):
-        mask = nb > j
-        if not mask.any():
-            break
-        byte = ((gaps[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nb[mask] - 1 > j).astype(np.uint8) << 7
-        enc[offsets[mask] + j] = byte | cont
-    all_bytes = enc.tobytes()
-    sizes = np.diff(bounds)
-    nblocks = -(-sizes // BLOCK_SIZE)
-    first_blk = np.zeros(len(starts) + 1, dtype=np.int64)
-    np.cumsum(nblocks, out=first_blk[1:])
-    total_blocks = int(first_blk[-1])
-    grp = np.repeat(np.arange(len(starts)), nblocks)
-    within = np.arange(total_blocks) - first_blk[grp]
-    b_start = starts[grp] + within * BLOCK_SIZE
-    b_end = np.minimum(b_start + BLOCK_SIZE, bounds[grp + 1])
-    blast = ids[b_end - 1]
-    bmax = (
-        np.maximum.reduceat(ws, b_start)
-        if total_blocks
-        else np.empty(0, dtype=np.float64)
-    )
-    boff = byte_off[b_start] - byte_off[starts[grp]]
-    out = {k.name: [] for k in INDEX_SCHEMA.fields}
-    for i in range(len(starts)):
-        lo, hi = int(starts[i]), int(bounds[i + 1])
-        b0, b1 = int(first_blk[i]), int(first_blk[i + 1])
-        pb = all_bytes[byte_off[lo] : byte_off[hi]]
-        wb = ws[lo:hi].tobytes()
-        out["term"].append(g_terms[i])
-        out["shard"].append(int(g_shards[i]))
-        out["df_shard"].append(hi - lo)
-        out["postings"].append(pb)
-        out["weights"].append(wb)
-        out["block_last"].append(blast[b0:b1].tolist())
-        out["block_max"].append(bmax[b0:b1].tolist())
-        out["block_off"].append(boff[b0:b1].tolist())
-        out["n_bytes"].append(len(pb) + len(wb))
-    return pd.DataFrame(out)
-
-
-def _encode_groups(pdf: pd.DataFrame, starts: np.ndarray, end: int) -> pd.DataFrame:
-    """Encode the complete (term, shard) runs of a sorted slice.
-
-    ``starts`` are group start offsets; rows [starts[-1], end) form the
-    LAST complete group (the caller withholds any run that may continue
-    into the next Arrow batch)."""
-    starts = np.asarray(starts, dtype=np.int64)
-    return _encode_group_arrays(
-        pdf["term"].to_numpy()[starts],
-        pdf["shard"].to_numpy()[starts],
-        pdf["doc_id"].to_numpy(dtype=np.int64)[:end],
-        pdf["w"].to_numpy(dtype=np.float64)[:end],
-        starts,
-        end,
-    )
-
-
-def _encode_sorted_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel over a partition hash-partitioned by
-    (term, shard) and Tungsten-sorted by (term, shard, doc_id): slice group
-    boundaries per Arrow batch, carrying any run that may continue into the
-    next batch. Replaces a collect_list aggregation that was measured ~7x
-    more expensive than the whole Python encode."""
+def sorted_groups(
+    batches: Iterator[pd.DataFrame], key1: str, key2: str
+) -> Iterator[tuple[pd.DataFrame, np.ndarray]]:
+    """Slice a pandas batch stream whose rows are sorted so each
+    (key1, key2) group is contiguous into COMPLETE groups: yields
+    ``(pdf, starts)`` per batch, where ``pdf`` holds whole groups only and
+    ``starts`` are their first-row offsets. A group that may continue
+    into the next Arrow batch is carried until the following batch or
+    the end of the stream. The one slicer of both mapInPandas kernels
+    (the encode here, the MaxScore batch kernel in query.py); it replaces
+    per-group applyInPandas (~2 ms Arrow round-trip per group) and, on
+    the encode side, a collect_list aggregation measured ~7x more
+    expensive than the whole Python encode."""
     pend: pd.DataFrame | None = None
     for pdf in batches:
         if pend is not None:
@@ -197,20 +111,44 @@ def _encode_sorted_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
             pend = None
         if not len(pdf):
             continue
-        terms = pdf["term"].to_numpy()
-        shards = pdf["shard"].to_numpy()
+        a = pdf[key1].to_numpy()
+        b = pdf[key2].to_numpy()
         change = np.empty(len(pdf), dtype=bool)
         change[0] = True
-        change[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
+        change[1:] = (a[1:] != a[:-1]) | (b[1:] != b[:-1])
         starts = np.flatnonzero(change)
         if len(starts) == 1:
-            pend = pdf  # single (possibly continuing) run: hold it all
+            pend = pdf  # single (possibly continuing) group: hold it all
             continue
-        tail_start = int(starts[-1])
-        pend = pdf.iloc[tail_start:].reset_index(drop=True)
-        yield _encode_groups(pdf, starts[:-1], tail_start)
+        tail = int(starts[-1])
+        pend = pdf.iloc[tail:].reset_index(drop=True)
+        yield pdf.iloc[:tail], starts[:-1]
     if pend is not None and len(pend):
-        yield _encode_groups(pend, np.array([0]), len(pend))
+        yield pend, np.zeros(1, dtype=np.int64)
+
+
+def _encode_sorted_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel over a partition hash-partitioned by
+    (term, shard) and Tungsten-sorted by (term, shard, doc_id): every
+    complete (term, shard) run becomes one ``INDEX_SCHEMA`` row, encoded
+    by ``codec.encode_runs`` in one pass per batch."""
+    for pdf, starts in sorted_groups(batches, "term", "shard"):
+        pb, wb, blast, bmax, boff, n = zip(
+            *encode_runs(pdf["doc_id"].to_numpy(), pdf["w"].to_numpy(), starts)
+        )
+        yield pd.DataFrame(
+            {
+                "term": pdf["term"].to_numpy()[starts],
+                "shard": pdf["shard"].to_numpy()[starts],
+                "df_shard": n,
+                "postings": pb,
+                "weights": wb,
+                "block_last": blast,
+                "block_max": bmax,
+                "block_off": boff,
+                "n_bytes": [len(p) + len(w) for p, w in zip(pb, wb)],
+            }
+        )
 
 
 def stage_postings(
@@ -283,8 +221,8 @@ def term_stats(runs: DataFrame) -> DataFrame:
 def write_runs(rows: DataFrame, out_dir: str, n_shards: int) -> None:
     """Weighted posting rows ``(term, doc_id, w)`` -> compressed
     per-(term, shard) runs at ``out_dir/term_postings``: the build's,
-    ``compact_index``'s delta and ``full_compact``'s segments
-    (``patch_deletes`` re-encodes single runs in its own kernel).
+    ``compact_index``'s delta, ``full_compact``'s and ``patch_deletes``'
+    patch segments.
 
     Hash-shuffle rows by (term, shard), Tungsten-sort each partition by
     (tkey, term, shard, doc_id) and stream the sorted rows through the

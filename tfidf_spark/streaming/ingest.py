@@ -14,9 +14,9 @@ Spark-native incremental path those semantics generalize to:
 
 Incremental INDEX maintenance (merging new postings into compressed
 (term, shard) runs) is deliberately batch: each microbatch appends to the
-postings table, and ``compact_index`` re-encodes only the (term, shard)
-groups that received new postings — an idempotent merge expressible with
-the same builder kernels (merge_encoded_runs handles the codec side).
+postings table, and ``compact_index`` encodes the new documents into a
+delta segment through ``builder.write_runs`` (the build's encode plan)
+and carries the base segments by reference, unread and unrewritten.
 """
 
 from __future__ import annotations
