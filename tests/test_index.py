@@ -8,6 +8,9 @@ oracle: the block-max MaxScore path must reproduce it rank-identically
 from __future__ import annotations
 
 import json
+import shutil
+import time
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -18,7 +21,11 @@ from pyspark.sql import functions as F
 
 from tfidf_spark.index.builder import _encode_sorted_stream, build_index, load_index
 from tfidf_spark.index.codec import decode_postings
-from tfidf_spark.index.query import bm25_query_index, bm25_query_terms
+from tfidf_spark.index.query import (
+    bm25_query_index,
+    bm25_query_terms,
+    bm25_query_terms_local,
+)
 from tfidf_spark.operators.postings import build_postings, doc_stats, corpus_stats, term_df
 from tfidf_spark.operators.scoring import bm25_topk
 
@@ -148,8 +155,6 @@ def test_batch_queries_on_real_data(spark, tmp_path):
     ],
 )
 def test_local_fast_path_matches_distributed(spark, tiny_corpus, tiny_index, terms, k):
-    from tfidf_spark.index.query import bm25_query_terms_local
-
     out, _ = tiny_index
     idx = load_index(spark, out)
     local = bm25_query_terms_local(idx, terms, k=k)
@@ -190,8 +195,6 @@ def test_local_fast_path_df_budget_fallback(spark, tiny_corpus, tiny_index):
     """df_budget=0 forces every term over budget: the fast path must
     delegate to the distributed kernel and return identical results —
     the driver never collects posting blobs for stop-like terms."""
-    from tfidf_spark.index.query import bm25_query_terms_local
-
     out, _ = tiny_index
     idx = load_index(spark, out)
     direct = bm25_query_terms_local(idx, ["a", "c"], k=10)        # under budget
@@ -220,8 +223,6 @@ def test_warm_serving_path_identical_and_cached(spark, tiny_corpus, tiny_index):
     path must return exactly the cold results, vocabulary misses must
     short-circuit without touching Spark, and the df-budget delegation
     must survive warming."""
-    from tfidf_spark.index.query import bm25_query_terms_local
-
     out, _ = tiny_index
     idx = load_index(spark, out)
     cold = {
@@ -251,8 +252,6 @@ def test_warm_dict_guard_refuses_oversized_vocab(spark, tiny_index):
     """A vocabulary larger than df_dict_max_terms must leave the
     dictionary unloaded (driver protected) while persistence and the
     scan-based precheck keep working."""
-    from tfidf_spark.index.query import bm25_query_terms_local
-
     out, _ = tiny_index
     idx = load_index(spark, out)
     info = idx.warm(df_dict_max_terms=1)
@@ -269,8 +268,6 @@ def test_warm_composes_with_tombstone_deletes(spark, tiny_corpus, tmp_path):
     pre-compaction df semantics deletes share with the distributed path
     (df corrects at compaction, Lucene-style)."""
     from tfidf_spark.index.incremental import delete_docs
-    from tfidf_spark.index.query import bm25_query_terms_local
-
     out = str(tmp_path / "idx")
     build_index(tiny_corpus, out, n_shards=2)
     idx = load_index(spark, out)
@@ -286,4 +283,144 @@ def test_warm_composes_with_tombstone_deletes(spark, tiny_corpus, tmp_path):
     assert [d for d, _ in after] == [d for d, _ in ref]
     for (_, a), (_, b) in zip(after, ref):
         assert a == pytest.approx(b, rel=1e-9)
+    idx.cool()
+
+
+# terms of the synthetic corpus: hot, mid and rare ones, a repeat, misses
+_SYNTH_QUERIES = [
+    ["w0", "w1"],
+    ["w3", "w7", "w3"],
+    ["w0"],
+    ["w12", "w40", "w99"],
+    ["w5", "nosuchterm"],
+    ["nosuchterm"],
+]
+
+
+@pytest.fixture(scope="module")
+def snapshots(spark, tmp_path_factory):
+    """A single-segment base, a ``compact_index``ed two-segment snapshot
+    on top of it, and a ``patch_deletes``ed snapshot of that one with
+    shadowed runs in both carried segments."""
+    from tfidf_spark.index.incremental import compact_index, delete_docs, patch_deletes
+    from tfidf_spark.sources.corpus import synth_corpus, with_doc_id
+
+    root = tmp_path_factory.mktemp("warm_snapshots")
+    full = with_doc_id(synth_corpus(spark, 120, partitions=4)).cache()
+    base_dir, merged_dir, patch_dir = (str(root / n) for n in ("base", "merged", "patched"))
+    build_index(full.filter(F.col("doc_id") % 3 != 0), base_dir, n_shards=4)
+    compact_index(
+        load_index(spark, base_dir), full.filter(F.col("doc_id") % 3 == 0),
+        merged_dir, force=True,
+    )
+    # the patch source is a throwaway copy of the merged snapshot, so the
+    # merged snapshot itself stays free of tombstones
+    src = str(root / "patch_src")
+    shutil.copytree(merged_dir, src)
+    top = [d for d, _ in bm25_query_terms_local(load_index(spark, src), ["w0", "w1"])]
+    delete_docs(load_index(spark, src), top[:2] + top[-1:])
+    pm = patch_deletes(load_index(spark, src), patch_dir)
+    assert pm["metrics"]["runs_patched"] >= 1
+    full.unpersist()
+    return {"base": base_dir, "merged": merged_dir, "patched": patch_dir}
+
+
+@pytest.mark.parametrize("name", ["base", "merged", "patched"])
+def test_warm_run_cache_identical_to_cold(spark, snapshots, name):
+    """Runs served from the warm run cache give exactly the results of
+    the cold pruned scan, on one segment, on a two-segment snapshot and on
+    a patched snapshot whose shadowed runs must stay out of the cache."""
+    path = snapshots[name]
+    cold_idx = load_index(spark, path)
+    cold = [bm25_query_terms_local(cold_idx, t) for t in _SYNTH_QUERIES]
+    idx = load_index(spark, path)
+    info = idx.warm()
+    assert info["run_cache_bytes"] == sum(
+        r["bytes"] for r in idx.term_stats.select("bytes").collect()
+    )
+    assert info["run_cache_bytes"] == sum(
+        len(run[1]) + len(run[2]) for runs in idx._run_cache.values() for run in runs
+    )
+    assert [bm25_query_terms_local(idx, t) for t in _SYNTH_QUERIES] == cold
+    if name == "patched":
+        assert idx.manifest["shadowed_runs"] and idx.deleted_ids
+    idx.cool()
+    assert idx._run_cache is None
+
+
+def _in_job_group(sc, group, queries):
+    """Run ``queries()`` with every Spark job it starts in job group
+    ``group``."""
+    sc.setJobGroup(group, "driver-local query")
+    try:
+        queries()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_warm_local_queries_run_no_spark_jobs(spark, snapshots, tmp_path):
+    """A warmed handle answers driver-local queries with zero Spark jobs:
+    repeated terms, a vocabulary miss and, after its first query, a
+    tombstoned handle. A cold handle under the same probe does run jobs,
+    which also shows the listener has caught up."""
+    from tfidf_spark.index.incremental import delete_docs
+
+    sc = spark.sparkContext
+    # the merged snapshot refers to its base as ../base: copy both
+    shutil.copytree(snapshots["base"], tmp_path / "base")
+    path = str(tmp_path / "merged")
+    shutil.copytree(snapshots["merged"], path)
+    idx = load_index(spark, path)
+    assert idx.warm()["run_cache_bytes"]
+    warm_group, ts_group, cold_group = (f"warm-{uuid.uuid4().hex}" for _ in range(3))
+
+    def warm_loop():
+        for _ in range(2):
+            for t in _SYNTH_QUERIES:
+                bm25_query_terms_local(idx, t)
+
+    _in_job_group(sc, warm_group, warm_loop)
+    victim = bm25_query_terms_local(idx, ["w0", "w1"])[0][0]
+    delete_docs(idx, [victim])
+    assert victim not in [d for d, _ in bm25_query_terms_local(idx, ["w0", "w1"])]
+    _in_job_group(sc, ts_group, warm_loop)
+    _in_job_group(
+        sc, cold_group, lambda: bm25_query_terms_local(load_index(spark, path), ["w0", "w1"])
+    )
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(cold_group) and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup(cold_group)
+    assert tracker.getJobIdsForGroup(warm_group) == []
+    assert tracker.getJobIdsForGroup(ts_group) == []
+    idx.cool()
+
+
+def test_warm_run_cache_budget_all_or_nothing(spark, snapshots):
+    """A budget smaller than one term's runs keeps no run cache at all
+    (queries take the pruned scan, same results); cool() drops the cache
+    and warming again does not grow it."""
+    path = snapshots["merged"]
+    cold = [bm25_query_terms_local(load_index(spark, path), t) for t in _SYNTH_QUERIES]
+    idx = load_index(spark, path)
+    smallest = min(r["bytes"] for r in idx.term_stats.select("bytes").collect())
+    info = idx.warm(run_cache_bytes=smallest - 1)
+    assert info["run_cache_bytes"] is None
+    assert info["df_dict_terms"] is not None
+    assert idx._run_cache is None
+    assert idx.term_postings.storageLevel.useMemory
+    assert [bm25_query_terms_local(idx, t) for t in _SYNTH_QUERIES] == cold
+    idx.cool()
+
+    def cache_size():
+        return sum(len(runs) for runs in idx._run_cache.values())
+
+    first = idx.warm()["run_cache_bytes"]
+    n_runs = cache_size()
+    idx.cool()
+    assert idx._run_cache is None
+    assert idx.warm()["run_cache_bytes"] == first and cache_size() == n_runs
+    assert idx.warm()["run_cache_bytes"] == first and cache_size() == n_runs
+    assert [bm25_query_terms_local(idx, t) for t in _SYNTH_QUERIES] == cold
     idx.cool()

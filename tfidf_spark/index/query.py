@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tfidf_spark.index.builder import IndexHandle, sorted_groups
+from tfidf_spark.index.builder import RUN_COLUMNS, IndexHandle, arrow_runs, sorted_groups
 from tfidf_spark.index.codec import BLOCK_SIZE, decode_block, decode_postings
 
 _KERNEL_SCHEMA = "query_id long, k int, doc_id long, score double"
@@ -120,15 +120,6 @@ class _Run:
             pos_c = np.minimum(pos, ids.size - 1)
             hit = (pos < ids.size) & (ids[pos_c] == cand[sel])
             col[sel[hit]] = self.idf * w[pos_c[hit]]
-
-
-def _runs(rows, idf_of) -> list[_Run]:
-    """Runs from index rows (Spark Rows or pandas itertuples)."""
-    return [
-        _Run(r.term, idf_of(r), bytes(r.postings), bytes(r.weights),
-             r.block_last, r.block_max, r.block_off)
-        for r in rows
-    ]
 
 
 def _fold(cols: dict[str, np.ndarray], terms: list[str], n: int) -> np.ndarray:
@@ -254,7 +245,11 @@ def _topk_slice(pdf: pd.DataFrame, n_docs: int) -> pd.DataFrame:
     one run and carries the query's ``terms`` array and its term's df."""
     query_id = int(pdf["query_id"].iloc[0])
     k = int(pdf["k"].iloc[0])
-    runs = _runs(pdf.itertuples(index=False), lambda r: _idf(n_docs, r.df))
+    runs = [
+        _Run(r.term, _idf(n_docs, r.df), bytes(r.postings), bytes(r.weights),
+             r.block_last, r.block_max, r.block_off)
+        for r in pdf.itertuples(index=False)
+    ]
     ids, scores = _topk(runs, list(pdf["terms"].iloc[0]), k)
     return pd.DataFrame(
         {
@@ -397,31 +392,36 @@ def bm25_query_terms(
 def bm25_query_terms_local(
     index: IndexHandle, terms: list[str], k: int = 10, df_budget: int = 2_000_000
 ) -> list[tuple[int, float]]:
-    """Low-latency single-query path: ONE pruned scan collects the
-    query's (term, shard) runs to the driver (a few compressed blobs),
-    then the kernel runs locally — no shuffle, no window, no Python-worker
-    round trip. This is the query-coordinator pattern a serving tier
-    uses; the distributed path (bm25_query_terms) is for query BATCHES.
-    Exact same scores: shards are disjoint doc sets, so feeding each run
-    to the kernel double-counts nothing, and df(term) = Σ df_shard of
-    the collected runs.
+    """Low-latency single-query path: the query's (term, shard) runs come
+    to the driver still encoded (a few compressed blobs) and the kernel
+    runs locally — no shuffle, no window, no Python-worker round trip.
+    This is the query-coordinator pattern a serving tier uses; the
+    distributed path (bm25_query_terms) is for query BATCHES. Exact same
+    scores: shards are disjoint doc sets, so feeding each run to the
+    kernel double-counts nothing, and df(term) = Σ df_shard of the runs.
+
+    Where the runs come from: a warmed handle (``IndexHandle.warm``)
+    holds them all in its run cache, and together with its term->df
+    dictionary and ``deleted_ids`` a query then runs no Spark job. A cold
+    handle, or one whose index exceeded the cache budget, gets them from
+    ONE pruned ``toArrow`` scan. Both sources go through
+    ``builder.arrow_runs``; everything after is the same code.
 
     ``df_budget`` guards the driver: a stop-like term's posting list is
     proportional to the corpus, and collecting it would OOM the driver at
-    10^12 files. term_stats (one tiny pruned scan, one row per query
-    term) is consulted FIRST; if Σ df exceeds the budget the query is
-    delegated to the distributed kernel (``bm25_query_index``), which
-    returns identical results — the executors decode, the driver only
-    sees k rows.
+    10^12 files. The terms' df is looked up FIRST (in the warm dictionary,
+    else one tiny pruned term_stats scan); if Σ df exceeds the budget the
+    query is delegated to the distributed kernel (``bm25_query_index``),
+    which returns identical results — the executors decode, the driver
+    only sees k rows.
     """
     if not terms or k <= 0:
         return []
     distinct = sorted(set(terms))
-    df_dict = getattr(index, "_df_dict", None)
+    df_dict = index._df_dict
     if df_dict is not None:
-        # warmed handle (IndexHandle.warm): the term dictionary is
-        # coordinator-resident, so the budget precheck costs no Spark job
-        # and vocabulary misses short-circuit with zero jobs
+        # warmed handle: the budget precheck costs no Spark job and
+        # vocabulary misses short-circuit with zero jobs
         total_df = sum(df_dict.get(t, 0) for t in distinct)
         if total_df == 0:
             return []
@@ -435,24 +435,21 @@ def bm25_query_terms_local(
     if total_df > df_budget:
         out = bm25_query_terms(index, terms, k=k).collect()
         return [(int(r["doc_id"]), float(r["score"])) for r in out]
-    rows = (
-        index.term_postings.filter(F.col("term").isin(distinct))
-        .select(
-            "term", "shard", "df_shard",
-            "postings", "weights", "block_last", "block_max", "block_off",
+    runs_of = index._run_cache
+    if runs_of is None:
+        runs_of = arrow_runs(
+            index.term_postings.filter(F.col("term").isin(distinct))
+            .select(*RUN_COLUMNS)
+            .toArrow()
         )
-        .collect()
-    )
-    if not rows:
+    found = [(t, run) for t in distinct for run in runs_of.get(t, ())]
+    if not found:
         return []
-    df_total: dict[str, int] = {}
-    for r in rows:
-        df_total[r["term"]] = df_total.get(r["term"], 0) + r["df_shard"]
-    ts = index.tombstones
-    deleted = (
-        {r["doc_id"] for r in ts.collect()} if index.n_tombstones else set()
-    )
-    runs = _runs(rows, lambda r: _idf(index.n_docs, df_total[r.term]))
+    df_total: Counter[str] = Counter()
+    for t, run in found:
+        df_total[t] += run[0]
+    deleted = index.deleted_ids
+    runs = [_Run(t, _idf(index.n_docs, df_total[t]), *run[1:]) for t, run in found]
     ids, scores = _topk(runs, list(terms), k + len(deleted))
     result = [
         (int(d), float(s)) for d, s in zip(ids, scores) if int(d) not in deleted
