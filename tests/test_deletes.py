@@ -299,3 +299,18 @@ def test_patch_deletes_on_multi_segment_base(spark, corpus, tmp_path):
         fr = [(r["doc_id"], r["score"])
               for r in bm25_query_terms(fidx, terms, k=20).collect()]
         assert pr and pr == fr, terms
+
+
+def test_delete_docs_total_without_recount(spark, corpus, tmp_path):
+    """delete_docs returns prior total + appended rows without
+    re-counting the table; across two calls with a duplicate id that
+    equals a fresh handle's count (duplicate rows included)."""
+    out = str(tmp_path / "idx_total")
+    build_index(corpus, out, n_shards=4)
+    idx = load_index(spark, out)
+    ids = [r["doc_id"] for r in corpus.select("doc_id").limit(3).collect()]
+    assert delete_docs(idx, ids[:2]) == 2
+    assert delete_docs(idx, [ids[1], ids[2]]) == 4
+    assert idx.n_tombstones == 4
+    assert idx.deleted_ids == set(ids)
+    assert load_index(spark, out).n_tombstones == 4

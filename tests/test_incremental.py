@@ -1,6 +1,6 @@
-"""Incremental maintenance: compacting a delta into an index must equal a
-full rebuild over the union (with avgdl pinned to the base), and must not
-decode untouched runs."""
+"""Incremental maintenance: compacting a delta into an index must rank
+the union exactly as the reference oracle does with avgdl pinned to the
+base's, and must not decode untouched runs."""
 
 from __future__ import annotations
 
@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 
 from tfidf_spark.index.builder import build_index, load_index
 from tfidf_spark.index.incremental import compact_index
-from tfidf_spark.index.query import bm25_query_terms
+from tfidf_spark.index.query import bm25_query_terms, bm25_query_terms_local
+from tfidf_spark.oracle import OracleIndex
 from tfidf_spark.sources.corpus import synth_corpus, with_doc_id
 
 
@@ -30,6 +31,20 @@ def _results(spark, path, terms, k=15):
     ]
 
 
+def _assert_matches_pinned_oracle(spark, path, docs, avgdl, queries, k=15):
+    """The snapshot at ``path`` ranks ``docs`` as the oracle does with
+    avgdl pinned to ``avgdl``: doc_id order exact, scores to rel 1e-9."""
+    oracle = OracleIndex({r["doc_id"]: r["content"] for r in docs.collect()})
+    oracle.avgdl = avgdl
+    idx = load_index(spark, path)
+    for terms in queries:
+        got = bm25_query_terms(idx, terms, k=k).collect()
+        expect = oracle.bm25_topk(terms, k)
+        assert [r["doc_id"] for r in got] == [d for d, _ in expect], terms
+        for r, (_, s) in zip(got, expect):
+            assert r["score"] == pytest.approx(s, rel=1e-9), terms
+
+
 def test_compact_equals_full_rebuild(spark, split_corpus, tmp_path):
     full, base, delta = split_corpus
     base_dir = str(tmp_path / "base")
@@ -41,22 +56,23 @@ def test_compact_equals_full_rebuild(spark, split_corpus, tmp_path):
     assert manifest["n_docs"] == full.count()
     assert manifest["increments"] == 1
 
-    # oracle: full rebuild over the union with avgdl pinned to the base's
-    rebuild_dir = str(tmp_path / "rebuild")
-    build_index(full, rebuild_dir, n_shards=4, avgdl_override=base_idx.avgdl)
-
-    for terms in (["w0"], ["w1", "w7"], ["w3", "w250", "w999"], ["zzz"]):
-        assert _results(spark, merged_dir, terms) == _results(
-            spark, rebuild_dir, terms
-        ), terms
+    # oracle: the union with avgdl pinned to the base's
+    _assert_matches_pinned_oracle(
+        spark, merged_dir, full, base_idx.avgdl,
+        (["w0"], ["w1", "w7"], ["w3", "w250", "w999"], ["zzz"]),
+    )
 
 
 def test_reingest_guard(spark, split_corpus, tmp_path):
     _, base, _ = split_corpus
     base_dir = str(tmp_path / "b3")
     build_index(base, base_dir, n_shards=4)
+    out_dir = tmp_path / "m3"
     with pytest.raises(ValueError, match="already exist"):
-        compact_index(load_index(spark, base_dir), base.limit(5), str(tmp_path / "m3"))
+        compact_index(load_index(spark, base_dir), base.limit(5), str(out_dir))
+    # the guard runs after the delta's doc_stats are staged, but a refused
+    # merge must never publish a snapshot
+    assert not (out_dir / "manifest.json").exists()
 
 
 def test_compact_carries_tombstones(spark, split_corpus, tmp_path):
@@ -138,9 +154,9 @@ def test_compact_is_o_delta(spark, split_corpus, tmp_path):
 
 
 def test_chained_increments_and_full_compact(spark, split_corpus, tmp_path):
-    """Two increments -> 3 segments, still rank-identical to a pinned
-    full rebuild; full_compact collapses back to one segment with
-    identical results."""
+    """Two increments -> 3 segments, still rank-identical to the oracle
+    over the union with avgdl pinned; full_compact collapses back to one
+    segment with identical results."""
     import os
 
     full, base, delta = split_corpus
@@ -158,12 +174,10 @@ def test_chained_increments_and_full_compact(spark, split_corpus, tmp_path):
     assert m2["increments"] == 2
     assert len(m2["segments"]["term_postings"]) == 3
 
-    rebuild_dir = str(tmp_path / "crb")
-    build_index(full, rebuild_dir, n_shards=4, avgdl_override=base_idx.avgdl)
-    for terms in (["w0"], ["w1", "w7"], ["w3", "w250", "w999"]):
-        assert _results(spark, m2_dir, terms) == _results(
-            spark, rebuild_dir, terms
-        ), terms
+    _assert_matches_pinned_oracle(
+        spark, m2_dir, full, base_idx.avgdl,
+        (["w0"], ["w1", "w7"], ["w3", "w250", "w999"]),
+    )
 
     from tfidf_spark.index.incremental import full_compact
 
@@ -172,10 +186,9 @@ def test_chained_increments_and_full_compact(spark, split_corpus, tmp_path):
     assert len(fm["segments"]["term_postings"]) == 1
     # self-contained snapshot: RELATIVE segment name (relocatable)
     assert fm["segments"]["term_postings"][0] == "term_postings"
-    for terms in (["w0"], ["w1", "w7"]):
-        assert _results(spark, fc_dir, terms) == _results(
-            spark, rebuild_dir, terms
-        ), terms
+    _assert_matches_pinned_oracle(
+        spark, fc_dir, full, base_idx.avgdl, (["w0"], ["w1", "w7"])
+    )
 
 
 def test_chained_snapshots_move_as_a_unit(spark, split_corpus, tmp_path):
@@ -238,3 +251,61 @@ def test_fresh_index_is_relocatable(spark, split_corpus, tmp_path):
     idx = load_index(spark, moved)
     assert all(p.startswith(moved) for p in idx.segment_paths("term_postings"))
     assert _results(spark, moved, ["w1", "w7"])  # queries run from the copy
+
+
+def test_compact_counts_zero_token_delta_docs(spark, split_corpus, tmp_path):
+    """Delta docs with no tokens (empty, or identifiers the reference
+    tokenizer cannot see) still count toward N and get ``n_unique == 0``
+    doc_stats rows: the staged marker rows carry them."""
+    _, base, _ = split_corpus
+    base_dir = str(tmp_path / "zb")
+    build_index(base, base_dir, n_shards=4)
+    base_idx = load_index(spark, base_dir)
+    delta = spark.createDataFrame(
+        [(10_001, ""), (10_002, "snake_case x86_64")], "doc_id long, content string"
+    )
+    merged_dir = str(tmp_path / "zm")
+    m = compact_index(base_idx, delta, merged_dir, force=True)
+    assert m["n_docs"] == base_idx.n_docs + 2
+    assert m["metrics"]["docs_tokenized"] == 2
+    assert m["metrics"]["postings_emitted"] == 0
+    stats = {
+        r["doc_id"]: (r["dl"], r["n_unique"])
+        for r in spark.read.parquet(f"{merged_dir}/doc_stats").collect()
+    }
+    assert stats == {10_001: (0, 0), 10_002: (0, 0)}
+
+
+def test_empty_corpus_builds_empty_index(spark, tmp_path):
+    """A corpus with no documents builds a valid empty index whose
+    queries return nothing (its staged postings are read with an
+    explicit schema: a zero-row partitioned write leaves no file to
+    infer one from)."""
+    out = str(tmp_path / "empty")
+    m = build_index(
+        spark.createDataFrame([], "doc_id long, content string"), out, n_shards=4
+    )
+    assert m["n_docs"] == 0
+    assert m["metrics"]["postings_emitted"] == 0
+    idx = load_index(spark, out)
+    assert bm25_query_terms(idx, ["w0", "w1"]).collect() == []
+    assert bm25_query_terms_local(idx, ["w0", "w1"]) == []
+
+
+def test_compact_empty_delta(spark, split_corpus, tmp_path):
+    """Compacting a delta with no documents adds an empty segment and
+    leaves N and every ranking as they were."""
+    _, base, _ = split_corpus
+    base_dir = str(tmp_path / "eb")
+    build_index(base, base_dir, n_shards=4)
+    base_idx = load_index(spark, base_dir)
+    merged_dir = str(tmp_path / "em")
+    m = compact_index(
+        base_idx, spark.createDataFrame([], "doc_id long, content string"), merged_dir
+    )
+    assert m["n_docs"] == base_idx.n_docs
+    assert m["metrics"]["docs_tokenized"] == 0
+    for terms in (["w0"], ["w1", "w7"]):
+        assert _results(spark, merged_dir, terms) == _results(
+            spark, base_dir, terms
+        ), terms

@@ -325,13 +325,14 @@ def test_stream_to_iceberg_exactly_once_and_incremental_index(spark, tmp_path):
     """The full streaming leg of the north-rule loop: micro-batches
     commit as Iceberg append snapshots (batch id in the summary);
     restarts never double-commit; incremental_changes between two
-    streamed snapshots feeds compact_index; results rank-identical to a
-    batch build over the same corpus."""
+    streamed snapshots feeds compact_index; results rank-identical to
+    the reference oracle over the same corpus (avgdl pinned)."""
     from pyspark.sql import functions as F
 
     from tfidf_spark.index.builder import build_index, load_index
     from tfidf_spark.index.incremental import compact_index
     from tfidf_spark.index.query import bm25_query_terms
+    from tfidf_spark.oracle import OracleIndex
     from tfidf_spark.sources import iceberg_meta
     from tfidf_spark.sources.catalog import incremental_changes, read_table
     from tfidf_spark.sources.corpus import synth_corpus, with_doc_id
@@ -407,7 +408,7 @@ def test_stream_to_iceberg_exactly_once_and_incremental_index(spark, tmp_path):
     )
 
     # incremental index maintenance off the streamed CDC feed,
-    # rank-identical to a batch build over the union
+    # rank-identical to the oracle over the union
     base_dir = str(tmp_path / "ibase")
     build_index(with_doc_id(got1), base_dir, n_shards=4,
                 source_snapshot=f"iceberg:{s1}")
@@ -415,18 +416,17 @@ def test_stream_to_iceberg_exactly_once_and_incremental_index(spark, tmp_path):
     merged_dir = str(tmp_path / "imerged")
     compact_index(base_idx, with_doc_id(appended), merged_dir, force=True)
 
-    rebuild_dir = str(tmp_path / "irebuild")
-    build_index(full, rebuild_dir, n_shards=4, avgdl_override=base_idx.avgdl)
-
-    def results(path, terms, k=15):
-        idx = load_index(spark, path)
-        return [
-            (r["doc_id"], round(r["score"], 9))
-            for r in bm25_query_terms(idx, terms, k=k).collect()
-        ]
-
+    oracle = OracleIndex(
+        {r["doc_id"]: r["content"] for r in full.select("doc_id", "content").collect()}
+    )
+    oracle.avgdl = base_idx.avgdl  # compact_index pins the base's avgdl
+    merged = load_index(spark, merged_dir)
     for terms in (["w0"], ["w1", "w7"], ["w3", "w250"]):
-        assert results(merged_dir, terms) == results(rebuild_dir, terms), terms
+        got = bm25_query_terms(merged, terms, k=15).collect()
+        expect = oracle.bm25_topk(terms, 15)
+        assert [r["doc_id"] for r in got] == [d for d, _ in expect], terms
+        for r, (_, score) in zip(got, expect):
+            assert r["score"] == pytest.approx(score, rel=1e-9), terms
 
 
 def test_stream_into_partitioned_table_inherits_spec(spark, tmp_path):

@@ -63,6 +63,7 @@ from pyspark.sql.types import (
 )
 
 from tfidf_spark import BM25_B, BM25_K1
+from tfidf_spark.index.checkpoint import StageCheckpointer
 from tfidf_spark.index.codec import encode_runs
 from tfidf_spark.operators.postings import with_term_counts
 from tfidf_spark.operators.scoring import bm25_weight_expr
@@ -191,6 +192,22 @@ def _encode_sorted_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
         )
 
 
+# The stage tables are read back with these schemas, not inferred ones:
+# a partitioned write of zero rows leaves no parquet file to infer from
+# (an empty corpus or delta must still stage an empty table), and each
+# inference costs a Spark job. ``stage_postings``' output:
+STAGED_SCHEMA = "doc_id long, term string, cnt int, dl int, part_id int, sec int"
+# the tables ``stage_documents`` writes from its marker rows
+DOC_STATS_SCHEMA = "doc_id long, dl int, n_unique long"
+LINEAGE_SCHEMA = "part_id int, n_docs long, n_postings long, dl_sum long, stage string"
+# the small per-snapshot tables an ``IndexHandle`` reads
+HANDLE_SCHEMAS = {
+    "doc_stats": DOC_STATS_SCHEMA,
+    "term_stats": "term string, df long, bytes long",
+    "tombstones": "doc_id long",
+}
+
+
 def stage_postings(
     docs: DataFrame,
     out_dir: str,
@@ -199,7 +216,7 @@ def stage_postings(
     code_aware: bool = False,
 ) -> None:
     """Stage 1: single tokenize pass -> postings parquet
-    ``(doc_id, term nullable, cnt, dl, part_id)``.
+    ``(doc_id, term nullable, cnt, dl, part_id)`` (``STAGED_SCHEMA``).
 
     EVERY doc additionally emits one null-term MARKER row with
     ``cnt = n_unique``: doc stats and per-partition lineage then derive
@@ -225,7 +242,7 @@ def stage_postings(
     )
     entries = F.concat(marker, F.map_entries("term_counts"))
     exploded = counted.select(
-        F.col(id_col).alias("doc_id"),
+        F.col(id_col).cast("long").alias("doc_id"),
         F.explode(entries).alias("e"),
         F.col("dl"),
         F.spark_partition_id().alias("part_id"),  # per-partition lineage key
@@ -239,6 +256,65 @@ def stage_postings(
     exploded.withColumn(
         "sec", F.when(F.col("term").isNull(), F.lit(1)).otherwise(F.lit(0))
     ).write.partitionBy("sec").mode("overwrite").parquet(f"{out_dir}/postings")
+
+
+def stage_documents(
+    ckpt: StageCheckpointer,
+    docs: DataFrame,
+    out_dir: str,
+    text_col: str = "content",
+    id_col: str = "doc_id",
+    code_aware: bool = False,
+) -> tuple[DataFrame, int, float]:
+    """Stages 1-2 of every documents -> segment write (``build_index``
+    and ``compact_index``'s delta): ``stage_postings``, then doc_stats
+    and per-partition lineage from the marker rows. Returns the staged
+    postings, N and dl_sum (from the lineage); the caller picks avgdl
+    and runs ``stage_encode``."""
+    spark = docs.sparkSession
+    ckpt.run(
+        "postings",
+        lambda: stage_postings(docs, out_dir, text_col, id_col, code_aware),
+    )
+    raw = spark.read.schema(STAGED_SCHEMA).parquet(f"{out_dir}/postings")
+
+    def _doc_stats():
+        # markers only: shuffle-free doc stats + lineage over n_docs rows,
+        # read via partition pruning (sec=1 directory — never touches the
+        # posting row groups)
+        markers = raw.filter(F.col("sec") == 1)
+        markers.select(
+            "doc_id", "dl", F.col("cnt").cast("long").alias("n_unique")
+        ).write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
+        # per-posting count per doc == n_unique (one row per distinct term).
+        # dl_sum folds the corpus-stats job into this write: N and avgdl
+        # then come from the tiny lineage table instead of a separate
+        # full doc_stats aggregation job.
+        markers.groupBy("part_id").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("cnt").alias("n_postings"),
+            F.sum("dl").alias("dl_sum"),
+        ).withColumn("stage", F.lit("postings")).write.mode("overwrite").parquet(
+            f"{out_dir}/_lineage/partitions"
+        )
+
+    ckpt.run("doc_stats", _doc_stats)
+    # one row per input partition, summed here: an aggregate collect
+    # would cost a second (shuffle) job
+    parts = (
+        spark.read.schema(LINEAGE_SCHEMA)
+        .parquet(f"{out_dir}/_lineage/partitions")
+        # partitions is a multi-stage table (stage, part_id, ...); a future
+        # stage appending rows here must not double-count N / dl_sum
+        .filter(F.col("stage") == "postings")
+        .select("n_docs", "dl_sum")
+        .collect()
+    )
+    return (
+        raw,
+        sum(r["n_docs"] for r in parts),
+        float(sum(r["dl_sum"] for r in parts)),
+    )
 
 
 def doc_shard(n_shards: int) -> Column:
@@ -308,9 +384,7 @@ def stage_encode(
 ) -> None:
     """Stage 3: staged postings (``stage_postings`` output) -> compressed
     per-(term, shard) runs at ``out_dir/term_postings`` via
-    ``write_runs``. Public so the stage-scaling harness
-    (tools/stage_scaling.py) times EXACTLY the build's encode plan in
-    isolation."""
+    ``write_runs``, BM25 weights folded under ``avgdl``."""
     postings = raw.filter(F.col("sec") == 0).select(
         "term",
         "doc_id",
@@ -330,7 +404,6 @@ def build_index(
     b: float = BM25_B,
     source_snapshot: str | None = None,
     resume: bool = False,
-    avgdl_override: float | None = None,
 ) -> dict:
     """Build the full index at ``out_dir``. Returns the manifest dict.
 
@@ -344,8 +417,6 @@ def build_index(
     version; it defaults to the build parameters only, so explicit
     versioning is strongly recommended for real resume use).
     """
-    from tfidf_spark.index.checkpoint import StageCheckpointer
-
     spark = docs.sparkSession
     fingerprint = json.dumps(
         {
@@ -362,55 +433,14 @@ def build_index(
         sort_keys=True,
     )
     ckpt = StageCheckpointer(out_dir, fingerprint, resume=resume)
-
-    ckpt.run(
-        "postings",
-        lambda: stage_postings(docs, out_dir, text_col, id_col, code_aware),
+    raw, n_docs, dl_sum = stage_documents(
+        ckpt, docs, out_dir, text_col, id_col, code_aware
     )
-    raw = spark.read.parquet(f"{out_dir}/postings")
-
-    def _doc_stats():
-        # markers only: shuffle-free doc stats + lineage over n_docs rows,
-        # read via partition pruning (sec=1 directory — never touches the
-        # posting row groups)
-        markers = raw.filter(F.col("sec") == 1)
-        markers.select(
-            "doc_id", "dl", F.col("cnt").cast("long").alias("n_unique")
-        ).write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
-        # per-posting count per doc == n_unique (one row per distinct term).
-        # dl_sum folds the corpus-stats job into this write: N and avgdl
-        # then come from the tiny lineage table instead of a separate
-        # full doc_stats aggregation job (a fixed per-build driver cost
-        # that the N->4N scaling criterion would otherwise carry).
-        markers.groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("cnt").alias("n_postings"),
-            F.sum("dl").alias("dl_sum"),
-        ).withColumn("stage", F.lit("postings")).write.mode("overwrite").parquet(
-            f"{out_dir}/_lineage/partitions"
-        )
-
-    ckpt.run("doc_stats", _doc_stats)
-    cs = (
-        spark.read.parquet(f"{out_dir}/_lineage/partitions")
-        # partitions is a multi-stage table (stage, part_id, ...); a future
-        # stage appending rows here must not double-count N / dl_sum
-        .filter(F.col("stage") == "postings")
-        .agg(F.sum("n_docs").alias("n"), F.sum("dl_sum").alias("dl_sum"))
-        .collect()[0]
-    )
-    n_docs = int(cs["n"] or 0)
-    avgdl = float(cs["dl_sum"] or 0.0) / n_docs if n_docs else 0.0
-    if avgdl_override is not None:
-        # incremental maintenance pins the ORIGINAL avgdl so stored
-        # weights stay mutually consistent across increments (see
-        # incremental.py for the drift/rebuild policy)
-        avgdl = avgdl_override
-
+    avgdl = dl_sum / n_docs if n_docs else 0.0
     ckpt.run(
         "encode", lambda: stage_encode(raw, out_dir, avgdl, n_shards, k1=k1, b=b)
     )
-    tp = spark.read.parquet(f"{out_dir}/term_postings")
+    tp = spark.read.schema(INDEX_SCHEMA).parquet(f"{out_dir}/term_postings")
 
     def _term_stats():
         # bytes ride along so the manifest totals come from the tiny
@@ -435,7 +465,7 @@ def build_index(
         # true cumulative token count: incremental merges use this for
         # exact drift accounting (pinned avgdl * n_docs would understate
         # drift once increments themselves pin avgdl)
-        "dl_sum": float(cs["dl_sum"] or 0.0),
+        "dl_sum": dl_sum,
         "n_shards": n_shards,
         "k1": k1,
         "b": b,
@@ -560,10 +590,11 @@ class IndexHandle:
         if df is None:
             if name == "term_postings":
                 df = self._read_term_postings()
-            elif name == "doc_stats":
-                df = self.spark.read.parquet(*self.segment_paths(name))
             else:
-                df = self.spark.read.parquet(f"{self.path}/{name}")
+                # explicit schema: an inferred one costs a Spark job
+                df = self.spark.read.schema(HANDLE_SCHEMAS[name]).parquet(
+                    *self.segment_paths(name)
+                )
             if name == "term_postings" and "block_off" not in df.columns:
                 raise ValueError(
                     f"index at {self.path} predates the block_off layout "

@@ -7,13 +7,16 @@ This is the scalable analog of the reference's per-upload index insert
 its posting rows) and the cascade-delete maintenance note
 (SURVEY.md §2.6). I/O and CPU are both proportional to the DELTA:
 
-- ``compact_index(delta)`` tokenizes + encodes ONLY the delta's postings
-  into ``out_dir/term_postings`` and lists the base snapshot's segment
-  directories in the new manifest (``segments``) — at 100 TB the merge
-  writes megabytes while the index stays at terabytes. The only
-  O(index)-adjacent work is re-aggregating ``term_stats`` (one row per
-  term — O(vocabulary), not O(postings); parquet column pruning means
-  the posting blobs are never read).
+- ``compact_index(delta)`` writes the delta's segment with the SAME
+  stages ``build_index`` runs (``builder.stage_documents`` then
+  ``builder.stage_encode``: one documents -> segment path, the weights
+  folded under the base's pinned avgdl) and lists the base snapshot's
+  segment directories in the new manifest (``segments``) — at 100 TB
+  the merge writes megabytes while the index stays at terabytes. The
+  only O(index)-adjacent work is the re-ingest guard's doc_id semi-join
+  and re-aggregating ``term_stats`` (one row per term — O(vocabulary),
+  not O(postings); parquet column pruning means the posting blobs are
+  never read).
 - Queries see multiple runs per (term, shard) — one per segment — and
   the MaxScore kernel scores each run as an independent list. Exactness
   is preserved because segments hold DISJOINT doc sets (the re-ingest
@@ -29,26 +32,33 @@ BM25 weight consistency: stored weights fold in avgdl at encode time.
 Increments PIN the base index's avgdl (so all runs score consistently)
 and track the drift between pinned and true avgdl in the manifest;
 when |drift| exceeds ``rebuild_threshold`` (default 10%) the caller
-should schedule a full rebuild — compact() raises unless forced.
+should schedule a full rebuild — compact_index raises unless forced.
+The re-ingest guard and the drift check run between the doc-stats
+stage and the encode, so a refused merge encodes nothing and writes no
+manifest.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tfidf_spark.index.builder import (
+    DOC_STATS_SCHEMA,
     FORMAT_VERSION,
+    INDEX_SCHEMA,
     IndexHandle,
     doc_shard,
+    stage_documents,
+    stage_encode,
     term_stats,
     write_runs,
 )
-from tfidf_spark.operators.postings import with_term_counts
-from tfidf_spark.operators.scoring import bm25_weight_expr
+from tfidf_spark.index.checkpoint import StageCheckpointer
 
 
 def _carried_refs(index: IndexHandle, name: str, out_abs: str) -> list[str]:
@@ -131,13 +141,16 @@ def delete_docs(index: IndexHandle, doc_ids: list[int]) -> int:
     ``tombstones/`` under the index. O(|delete|) — no run is touched;
     queries anti-filter tombstones (bm25_query_index over-fetches by the
     tombstone count so top-k never under-fills); ``compact_deletes``
-    applies them physically. Returns the new tombstone total."""
-    spark = index.spark
-    spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long").write.mode(
-        "append"
-    ).parquet(f"{index.path}/tombstones")
+    applies them physically. Returns the new tombstone total: the prior
+    total (no job when there were no tombstones, or the handle already
+    knew it) plus the appended rows — the table is not re-counted."""
+    total = index.n_tombstones + len(doc_ids)
+    index.spark.createDataFrame(
+        [(int(d),) for d in doc_ids], "doc_id long"
+    ).write.mode("append").parquet(f"{index.path}/tombstones")
     index.invalidate_tombstones()
-    return index.n_tombstones
+    index._n_tombstones = total
+    return total
 
 
 def full_compact(index: IndexHandle, out_dir: str) -> dict:
@@ -451,10 +464,12 @@ def compact_index(
     during the merge, Iceberg-style).
 
     O(delta) by construction — ONE tokenize pass over the delta only:
-      1. tokenize delta -> delta postings with weights under the PINNED
-         base avgdl
-      2. encode the delta postings into ``out_dir/term_postings`` — a new
-         SEGMENT (same sort + stream kernel as the full build)
+      1. ``builder.stage_documents`` stages the delta's postings and
+         writes its ``doc_stats`` — the same stages ``build_index`` runs;
+         N and dl_sum come from their lineage
+      2. the re-ingest guard and the avgdl-drift check run against the
+         base; then ``builder.stage_encode`` writes the delta SEGMENT
+         ``out_dir/term_postings`` under the base's PINNED avgdl
       3. carry every base segment over BY REFERENCE: the new manifest's
          ``segments`` lists the base's directories plus the delta's; no
          base byte is read or written
@@ -464,7 +479,8 @@ def compact_index(
     ``code_aware`` defaults to the BASE index's tokenizer mode; passing a
     different mode explicitly raises — mixing tokenizers in one index
     silently corrupts postings. Existing tombstones are copied into the
-    new snapshot so deleted docs stay filtered after the merge.
+    new snapshot so deleted docs stay filtered after the merge. A refused
+    merge (drift or re-ingest) leaves the staged files but no manifest.
     """
     spark = new_docs.sparkSession
     base_mode = bool(index.manifest.get("code_aware", False))
@@ -479,21 +495,12 @@ def compact_index(
     k1, b = index.k1, index.b
     pinned_avgdl = index.avgdl if index.avgdl > 0 else 1.0
 
-    counted = with_term_counts(new_docs, text_col, code_aware)
-    delta = counted.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode_outer("term_counts").alias("term", "cnt"),
-        F.col("dl"),
+    ckpt = StageCheckpointer(
+        out_dir, json.dumps({"base": index.path, "avgdl": pinned_avgdl}), resume=False
     )
-    delta.cache()
-    delta_stats = delta.groupBy("doc_id").agg(
-        F.max("dl").alias("dl"), F.count("term").alias("n_unique")
+    raw, n_new, new_dl_sum = stage_documents(
+        ckpt, new_docs, out_dir, text_col, id_col, code_aware
     )
-    counts = delta_stats.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl")
-    ).collect()[0]
-    n_new = int(counts["n"])
-    new_dl_sum = counts["dl"] or 0
 
     # Re-ingest guard (the reference rejects duplicate uploads by hash,
     # app/controllers/document.py:150-156): a doc_id already in the base
@@ -501,7 +508,12 @@ def compact_index(
     # disjoint-segments invariant the multi-run query kernel relies on.
     # Deduplicate upstream (left_anti on doc_id or content sha) before
     # compacting.
-    overlap = delta_stats.join(index.doc_stats, "doc_id", "left_semi").count()
+    overlap = (
+        spark.read.schema(DOC_STATS_SCHEMA)
+        .parquet(f"{out_dir}/doc_stats")
+        .join(index.doc_stats, "doc_id", "left_semi")
+        .count()
+    )
     if overlap:
         raise ValueError(
             f"{overlap} delta doc_ids already exist in the base index; "
@@ -519,7 +531,7 @@ def compact_index(
             index.manifest.get("true_avgdl", index.avgdl) * index.n_docs,
         )
     )
-    true_avgdl = (base_dl_sum + float(new_dl_sum)) / max(n_docs, 1)
+    true_avgdl = (base_dl_sum + new_dl_sum) / max(n_docs, 1)
     drift = abs(true_avgdl - pinned_avgdl) / max(pinned_avgdl, 1e-12)
     if drift > rebuild_threshold and not force:
         raise RuntimeError(
@@ -527,25 +539,28 @@ def compact_index(
             f"{rebuild_threshold}: schedule a full rebuild (or force=True)"
         )
 
-    delta_posts = delta.filter(F.col("term").isNotNull()).select(
-        "term",
-        "doc_id",
-        bm25_weight_expr("cnt", "dl", pinned_avgdl, k1, b).alias("w"),
+    ckpt.run(
+        "encode",
+        lambda: stage_encode(raw, out_dir, pinned_avgdl, n_shards, k1=k1, b=b),
     )
-    write_runs(delta_posts, out_dir, n_shards)
-    delta_stats.write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
+    # the staged postings only feed the encode, and a compaction never
+    # resumes: the snapshot keeps its segments, not the staging table
+    shutil.rmtree(f"{out_dir}/postings")
+    seg = spark.read.schema(INDEX_SCHEMA).parquet(f"{out_dir}/term_postings")
 
-    # term_stats must stay one-row-per-term (the query-side idf join
-    # broadcasts it), so it is re-aggregated over the delta segment's
-    # runs ∪ the base stats, each base row standing for all of its
-    # term's base runs. O(vocabulary + delta runs) rows.
-    seg = spark.read.parquet(f"{out_dir}/term_postings")
-    base_runs = index.term_stats.select(
-        "term", F.col("df").alias("df_shard"), F.col("bytes").alias("n_bytes")
-    )
-    term_stats(base_runs.unionByName(seg.select(*base_runs.columns))).write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/term_stats")
+    def _term_stats():
+        # term_stats must stay one-row-per-term (the query-side idf join
+        # broadcasts it), so it is re-aggregated over the delta segment's
+        # runs ∪ the base stats, each base row standing for all of its
+        # term's base runs. O(vocabulary + delta runs) rows.
+        base_runs = index.term_stats.select(
+            "term", F.col("df").alias("df_shard"), F.col("bytes").alias("n_bytes")
+        )
+        term_stats(base_runs.unionByName(seg.select(*base_runs.columns))).write.mode(
+            "overwrite"
+        ).parquet(f"{out_dir}/term_stats")
+
+    ckpt.run("term_stats", _term_stats)
 
     # carry tombstones forward: the merged snapshot must keep filtering
     # docs deleted from the base, or they silently reappear in results.
@@ -574,7 +589,7 @@ def compact_index(
             "n_docs": n_docs,
             "avgdl": pinned_avgdl,
             "true_avgdl": true_avgdl,
-            "dl_sum": base_dl_sum + float(new_dl_sum),
+            "dl_sum": base_dl_sum + new_dl_sum,
             "avgdl_drift": drift,
             "increments": index.manifest.get("increments", 0) + 1,
             "segments": {
@@ -595,10 +610,10 @@ def compact_index(
                 "postings_emitted": int(delta_bytes["p"] or 0),
                 "bytes_written_postings": int(delta_bytes["b"] or 0),
                 "carried_segments": len(base_segs["term_postings"]),
+                **ckpt.walls,
             },
         }
     )
     with open(os.path.join(out_dir, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=2)
-    delta.unpersist()
     return manifest
