@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from tfidf_spark.index.builder import build_index, load_index
 from tfidf_spark.index.incremental import compact_deletes, delete_docs
-from tfidf_spark.index.query import bm25_query_terms
+from tfidf_spark.index.query import bm25_query_index, bm25_query_terms
 from tfidf_spark.sources.corpus import synth_corpus, with_doc_id
 
 
@@ -19,6 +19,18 @@ def corpus(spark):
     df = with_doc_id(synth_corpus(spark, 100, partitions=4)).cache()
     df.count()
     return df
+
+
+def _both_paths(idx, terms, k):
+    """The coordinator's answer (``bm25_query_terms``) as ``(doc_id,
+    score)`` rows, checked equal to the executor kernel's (the join
+    path), whose per-shard top-k over-fetches by the unapplied tombstone
+    count where the coordinator's over-fetches by all of them."""
+    got = [(r["doc_id"], r["score"]) for r in bm25_query_terms(idx, terms, k=k).collect()]
+    q = idx.spark.createDataFrame([(0, terms, k)], "query_id long, terms array<string>, k int")
+    rows = bm25_query_index(idx, q, prune_by_collect=False).collect()
+    assert got == [(r["doc_id"], r["score"]) for r in sorted(rows, key=lambda r: r["rank"])]
+    return got
 
 
 def test_tombstones_filter_queries(spark, corpus, tmp_path):
@@ -30,8 +42,9 @@ def test_tombstones_filter_queries(spark, corpus, tmp_path):
     victims = [r["doc_id"] for r in before[:3]]
     assert delete_docs(idx, victims) == 3
 
-    after = bm25_query_terms(idx, ["w0", "w1"], k=10).collect()
-    got_ids = [r["doc_id"] for r in after]
+    assert idx.n_unapplied_tombstones == 3
+    after = _both_paths(idx, ["w0", "w1"], 10)
+    got_ids = [d for d, _ in after]
     assert not (set(victims) & set(got_ids))
     assert len(after) == 10  # over-fetch prevented under-fill
     # survivors keep their relative order and scores
@@ -227,6 +240,11 @@ def test_repatch_keeps_absolute_doc_stats(spark, corpus, tmp_path):
     # retry pattern: one of the new deletes is issued twice, and one
     # already-applied victim is deleted again
     delete_docs(idx1, second + [second[0], first[0]])
+    # 3 applied + 4 new rows: the executor path over-fetches by 4
+    fresh1 = load_index(spark, p1)
+    assert fresh1.n_unapplied_tombstones == 4
+    hits = {d for d, _ in _both_paths(fresh1, ["w1", "w2"], 10)}
+    assert len(hits) == 10 and not hits & set(rows)
     p2 = str(tmp_path / "rp2")
     m2 = patch_deletes(load_index(spark, p1), p2)
     assert m2["n_docs"] == 100 - 5, "double-decrement regression"
@@ -301,10 +319,12 @@ def test_patch_deletes_on_multi_segment_base(spark, corpus, tmp_path):
         assert pr and pr == fr, terms
 
 
-def test_delete_docs_total_without_recount(spark, corpus, tmp_path):
+def test_delete_docs_total_without_recount(spark, corpus, tmp_path, jobs_of):
     """delete_docs returns prior total + appended rows without
     re-counting the table; across two calls with a duplicate id that
-    equals a fresh handle's count (duplicate rows included)."""
+    equals a fresh handle's count (duplicate rows included). On the fresh
+    handle one collect of the tombstone table gives both that count and
+    ``deleted_ids``, the distinct set."""
     out = str(tmp_path / "idx_total")
     build_index(corpus, out, n_shards=4)
     idx = load_index(spark, out)
@@ -313,4 +333,8 @@ def test_delete_docs_total_without_recount(spark, corpus, tmp_path):
     assert delete_docs(idx, [ids[1], ids[2]]) == 4
     assert idx.n_tombstones == 4
     assert idx.deleted_ids == set(ids)
-    assert load_index(spark, out).n_tombstones == 4
+    fresh, seen = load_index(spark, out), {}
+    jobs = jobs_of(lambda: seen.update(n=fresh.n_tombstones, ids=fresh.deleted_ids))
+    assert len(jobs) == 1
+    assert seen == {"n": 4, "ids": set(ids)}
+

@@ -9,8 +9,6 @@ from __future__ import annotations
 
 import json
 import shutil
-import time
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -28,6 +26,17 @@ from tfidf_spark.index.query import (
 )
 from tfidf_spark.operators.postings import build_postings, doc_stats, corpus_stats, term_df
 from tfidf_spark.operators.scoring import bm25_topk
+
+
+_QUERY_SCHEMA = "query_id long, terms array<string>, k int"
+
+
+def _join_path(idx, terms, k):
+    """One query through the executor kernel (the join path,
+    ``prune_by_collect=False``) -> ``[(doc_id, score)]`` in rank order."""
+    q = idx.spark.createDataFrame([(0, terms, k)], _QUERY_SCHEMA)
+    rows = bm25_query_index(idx, q, prune_by_collect=False).collect()
+    return [(r["doc_id"], r["score"]) for r in sorted(rows, key=lambda r: r["rank"])]
 
 
 @pytest.fixture(scope="module")
@@ -158,9 +167,7 @@ def test_local_fast_path_matches_distributed(spark, tiny_corpus, tiny_index, ter
     out, _ = tiny_index
     idx = load_index(spark, out)
     local = bm25_query_terms_local(idx, terms, k=k)
-    dist = [
-        (r["doc_id"], r["score"]) for r in bm25_query_terms(idx, terms, k=k).collect()
-    ]
+    dist = _join_path(idx, terms, k)
     assert [d for d, _ in local] == [d for d, _ in dist]
     for (_, a), (_, b) in zip(local, dist):
         assert a == pytest.approx(b, rel=1e-9)
@@ -199,6 +206,7 @@ def test_local_fast_path_df_budget_fallback(spark, tiny_corpus, tiny_index):
     idx = load_index(spark, out)
     direct = bm25_query_terms_local(idx, ["a", "c"], k=10)        # under budget
     fallback = bm25_query_terms_local(idx, ["a", "c"], k=10, df_budget=0)
+    assert fallback == _join_path(idx, ["a", "c"], 10)
     assert [d for d, _ in fallback] == [d for d, _ in direct]
     for (_, a), (_, b) in zip(fallback, direct):
         assert a == pytest.approx(b, rel=1e-9)
@@ -348,52 +356,30 @@ def test_warm_run_cache_identical_to_cold(spark, snapshots, name):
     assert idx._run_cache is None
 
 
-def _in_job_group(sc, group, queries):
-    """Run ``queries()`` with every Spark job it starts in job group
-    ``group``."""
-    sc.setJobGroup(group, "driver-local query")
-    try:
-        queries()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
-def test_warm_local_queries_run_no_spark_jobs(spark, snapshots, tmp_path):
+def test_warm_local_queries_run_no_spark_jobs(spark, snapshots, tmp_path, jobs_of):
     """A warmed handle answers driver-local queries with zero Spark jobs:
     repeated terms, a vocabulary miss and, after its first query, a
-    tombstoned handle. A cold handle under the same probe does run jobs,
-    which also shows the listener has caught up."""
+    tombstoned handle. A cold handle under the same probe does run jobs."""
     from tfidf_spark.index.incremental import delete_docs
 
-    sc = spark.sparkContext
     # the merged snapshot refers to its base as ../base: copy both
     shutil.copytree(snapshots["base"], tmp_path / "base")
     path = str(tmp_path / "merged")
     shutil.copytree(snapshots["merged"], path)
     idx = load_index(spark, path)
     assert idx.warm()["run_cache_bytes"]
-    warm_group, ts_group, cold_group = (f"warm-{uuid.uuid4().hex}" for _ in range(3))
 
     def warm_loop():
         for _ in range(2):
             for t in _SYNTH_QUERIES:
                 bm25_query_terms_local(idx, t)
 
-    _in_job_group(sc, warm_group, warm_loop)
+    assert jobs_of(warm_loop) == []
     victim = bm25_query_terms_local(idx, ["w0", "w1"])[0][0]
     delete_docs(idx, [victim])
     assert victim not in [d for d, _ in bm25_query_terms_local(idx, ["w0", "w1"])]
-    _in_job_group(sc, ts_group, warm_loop)
-    _in_job_group(
-        sc, cold_group, lambda: bm25_query_terms_local(load_index(spark, path), ["w0", "w1"])
-    )
-    tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(cold_group) and time.time() < deadline:
-        time.sleep(0.1)
-    assert tracker.getJobIdsForGroup(cold_group)
-    assert tracker.getJobIdsForGroup(warm_group) == []
-    assert tracker.getJobIdsForGroup(ts_group) == []
+    assert jobs_of(warm_loop) == []
+    assert jobs_of(lambda: bm25_query_terms_local(load_index(spark, path), ["w0", "w1"]))
     idx.cool()
 
 
@@ -424,3 +410,107 @@ def test_warm_run_cache_budget_all_or_nothing(spark, snapshots):
     assert idx.warm()["run_cache_bytes"] == first and cache_size() == n_runs
     assert [bm25_query_terms_local(idx, t) for t in _SYNTH_QUERIES] == cold
     idx.cool()
+
+
+# a collected batch's edge cases: repeated terms, k = 0, empty terms, a
+# vocabulary miss, k above the match count
+_BATCH = [
+    (0, ["w0", "w1"], 10),
+    (1, ["w3", "w7", "w3"], 5),
+    (2, ["w0", "w1"], 0),
+    (3, [], 5),
+    (4, ["nosuchterm"], 5),
+    (5, ["w12", "w40", "w99"], 1000),
+    (6, ["w5", "nosuchterm"], 7),
+]
+
+
+def _by_query(rows):
+    out = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+        out.setdefault(r["query_id"], []).append((r["doc_id"], r["score"], r["rank"]))
+    return out
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("name", ["base", "merged", "patched"])
+def test_collected_batch_equals_join_path(spark, snapshots, name, monkeypatch):
+    """The coordinator answers a collected batch with exactly the rows of
+    the executor kernel (the join path): same doc_id order, scores and
+    ranks, on one segment, two segments and a patched snapshot with
+    tombstones. Over ``DF_BUDGET`` the batch goes to the executor kernel
+    and still returns the same rows."""
+    from tfidf_spark.index import query
+
+    qdf = spark.createDataFrame(_BATCH, _QUERY_SCHEMA)
+    join = _by_query(
+        bm25_query_index(load_index(spark, snapshots[name]), qdf, prune_by_collect=False)
+        .collect()
+    )
+    # non-vacuity: real hits, no rows for k = 0, empty terms or a miss,
+    # and fewer matches than k for query 5
+    assert len(join[0]) == 10 and len(join[1]) == 5
+    assert not {2, 3, 4} & set(join)
+    assert 0 < len(join[5]) < 1000
+    collected = bm25_query_index(load_index(spark, snapshots[name]), qdf)
+    assert "LocalTableScan" in _executed_plan(collected)
+    assert _by_query(collected.collect()) == join
+
+    monkeypatch.setattr(query, "DF_BUDGET", 0)
+    over = bm25_query_index(load_index(spark, snapshots[name]), qdf)
+    assert "MapInPandas" in _executed_plan(over)
+    assert _by_query(over.collect()) == join
+
+
+def test_collected_batch_job_budget(spark, snapshots, tmp_path, jobs_of):
+    """A warm handle answers a collected batch whose query DataFrame is a
+    local relation with no Spark job. A cold two-segment handle with
+    tombstones runs at most four: the query-row collect, the tombstone
+    collect, the term_stats select and the pruned run scan."""
+    from tfidf_spark.index.incremental import delete_docs
+
+    shutil.copytree(snapshots["base"], tmp_path / "base")
+    path = str(tmp_path / "merged")
+    shutil.copytree(snapshots["merged"], path)
+    top = [d for d, _ in bm25_query_terms_local(load_index(spark, path), ["w0", "w1"])]
+    delete_docs(load_index(spark, path), top[:3])
+
+    listed = spark.createDataFrame(_BATCH, _QUERY_SCHEMA)
+    cold = load_index(spark, path)
+    got = {}
+    cold_jobs = jobs_of(lambda: got.update(cold=bm25_query_index(cold, listed).collect()))
+    assert 1 <= len(cold_jobs) <= 4
+
+    local = spark.createDataFrame(
+        pd.DataFrame(_BATCH, columns=["query_id", "terms", "k"]), _QUERY_SCHEMA
+    )
+    warm = load_index(spark, path)
+    assert warm.warm()["run_cache_bytes"]
+    assert warm.deleted_ids == set(top[:3])
+    assert jobs_of(lambda: got.update(warm=bm25_query_index(warm, local).collect())) == []
+    warm.cool()
+    assert _by_query(got["warm"]) == _by_query(got["cold"])
+    assert not set(top[:3]) & {d for d, _, _ in _by_query(got["cold"])[0]}
+
+
+def test_pre_block_off_segment_refused(spark, tiny_index, tmp_path, jobs_of):
+    """A posting segment without ``block_off`` (the v1 layout) is refused
+    with a rebuild message, read from a parquet footer without a Spark
+    job; the explicit-schema read alone would return nulls."""
+    out = tmp_path / "old"
+    shutil.copytree(tiny_index[0], out)
+    seg = str(out / "term_postings")
+    spark.read.parquet(seg).drop("block_off").write.parquet(str(tmp_path / "v1seg"))
+    shutil.rmtree(seg)
+    shutil.move(str(tmp_path / "v1seg"), seg)
+    idx = load_index(spark, str(out))
+
+    def read():
+        with pytest.raises(ValueError, match="rebuild required"):
+            idx.term_postings
+
+    assert jobs_of(read) == []
+    assert "block_off" in load_index(spark, tiny_index[0]).term_postings.columns

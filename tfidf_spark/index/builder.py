@@ -205,6 +205,8 @@ HANDLE_SCHEMAS = {
     "doc_stats": DOC_STATS_SCHEMA,
     "term_stats": "term string, df long, bytes long",
     "tombstones": "doc_id long",
+    # (segment ref, term, shard) runs superseded by a patch segment
+    "shadowed_runs": "seg string, term string, shard int",
 }
 
 
@@ -450,7 +452,8 @@ def build_index(
     ckpt.run("term_stats", _term_stats)
 
     stats = (
-        spark.read.parquet(f"{out_dir}/term_stats")
+        spark.read.schema(HANDLE_SCHEMAS["term_stats"])
+        .parquet(f"{out_dir}/term_stats")
         .agg(F.sum("df").alias("n_postings"), F.sum("bytes").alias("bytes"))
         .collect()[0]
     )
@@ -547,6 +550,27 @@ class IndexHandle:
         # pre-v3 snapshot: single directory under the index root
         return [os.path.join(self.path, name)]
 
+    def _check_layout(self, paths: list[str]) -> None:
+        """Refuse a snapshot whose posting segments predate the block_off
+        layout. The segments are read with ``INDEX_SCHEMA``, under which a
+        missing column reads as nulls, so the check reads one parquet
+        footer per segment (driver-side, no Spark job)."""
+        import pyarrow.parquet as pq
+
+        for p in paths:
+            if not os.path.isdir(p):
+                continue  # the read reports the missing path
+            files = sorted(
+                f for f in os.listdir(p)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+            if files and "block_off" not in pq.read_schema(os.path.join(p, files[0])).names:
+                raise ValueError(
+                    f"index at {self.path} predates the block_off layout "
+                    f"(format_version >= 2): rebuild required "
+                    "(build_index over the source corpus)"
+                )
+
     def _read_term_postings(self) -> DataFrame:
         """Union of posting segments; on a patched snapshot
         (incremental.patch_deletes) the carried segments' superseded runs
@@ -556,10 +580,12 @@ class IndexHandle:
             "term_postings", ["term_postings"]
         )
         paths = self.segment_paths("term_postings")
+        self._check_layout(paths)
+        read = self.spark.read.schema(INDEX_SCHEMA)
         if not self.manifest.get("shadowed_runs"):
-            return self.spark.read.parquet(*paths)
+            return read.parquet(*paths)
         parts = [
-            self.spark.read.parquet(p).withColumn("_seg", F.lit(ref))
+            read.parquet(p).withColumn("_seg", F.lit(ref))
             for ref, p in zip(refs, paths)
         ]
         df = parts[0]
@@ -577,11 +603,7 @@ class IndexHandle:
         """(seg, term, shard) runs superseded by a patch segment, or None."""
         if not self.manifest.get("shadowed_runs"):
             return None
-        df = self._dfs.get("shadowed_runs")
-        if df is None:
-            df = self.spark.read.parquet(f"{self.path}/shadowed_runs")
-            self._dfs["shadowed_runs"] = df
-        return df
+        return self._cached("shadowed_runs")
 
     def _cached(self, name: str) -> DataFrame:
         # one read per table per handle: repeated spark.read calls re-list
@@ -594,12 +616,6 @@ class IndexHandle:
                 # explicit schema: an inferred one costs a Spark job
                 df = self.spark.read.schema(HANDLE_SCHEMAS[name]).parquet(
                     *self.segment_paths(name)
-                )
-            if name == "term_postings" and "block_off" not in df.columns:
-                raise ValueError(
-                    f"index at {self.path} predates the block_off layout "
-                    f"(format_version >= 2): rebuild required "
-                    "(build_index over the source corpus)"
                 )
             self._dfs[name] = df
         return df
@@ -623,23 +639,28 @@ class IndexHandle:
             return None
         return self._cached("tombstones")
 
+    def _load_tombstones(self) -> None:
+        """One collect of the tombstone table fills both ``n_tombstones``
+        (its row count, duplicates included, as ``delete_docs`` keeps the
+        running total) and ``deleted_ids`` (the distinct set)."""
+        ts = self.tombstones
+        ids = [] if ts is None else [int(r["doc_id"]) for r in ts.collect()]
+        self._n_tombstones = len(ids)
+        self._deleted_ids = set(ids)
+
     @property
     def n_tombstones(self) -> int:
         if self._n_tombstones is None:
-            ts = self.tombstones
-            self._n_tombstones = 0 if ts is None else ts.count()
+            self._load_tombstones()
         return self._n_tombstones
 
     @property
     def deleted_ids(self) -> set[int]:
         """Soft-deleted doc_ids as a driver-side set: collected on first
         use, then held until ``invalidate_tombstones``, so the
-        driver-local query path filters tombstones with no Spark job."""
+        coordinator query path filters tombstones with no Spark job."""
         if self._deleted_ids is None:
-            ts = self.tombstones
-            self._deleted_ids = (
-                set() if ts is None else {int(r["doc_id"]) for r in ts.collect()}
-            )
+            self._load_tombstones()
         return self._deleted_ids
 
     @property

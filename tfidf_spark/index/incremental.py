@@ -170,12 +170,12 @@ def full_compact(index: IndexHandle, out_dir: str) -> dict:
         kept_stats = kept_stats.join(ts, "doc_id", "left_anti")
     write_runs(rows, out_dir, index.manifest["n_shards"])
     kept_stats.write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
-    kept = spark.read.parquet(f"{out_dir}/doc_stats").agg(
+    kept = spark.read.schema(DOC_STATS_SCHEMA).parquet(f"{out_dir}/doc_stats").agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl_sum")
     ).collect()[0]
     n_docs = int(kept["n"])
 
-    tp = spark.read.parquet(f"{out_dir}/term_postings")
+    tp = spark.read.schema(INDEX_SCHEMA).parquet(f"{out_dir}/term_postings")
     term_stats(tp).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
 
     dl_sum = float(kept["dl_sum"] or 0.0)
@@ -291,13 +291,11 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     out_abs = os.path.abspath(out_dir)
     os.makedirs(out_abs, exist_ok=True)
 
-    # np.unique, not sorted(): delete_docs appends without dedup, so a
-    # retried delete produces duplicate tombstone rows — and the
+    # the distinct set (delete_docs appends without dedup, and the
     # assume_unique=True np.isin probe below has UNDEFINED results on a
-    # non-unique test array (ADVICE r4 #2).
-    del_ids = np.unique(
-        np.fromiter((r["doc_id"] for r in ts.collect()), dtype=np.int64)
-    )
+    # non-unique test array, ADVICE r4 #2), sorted for the searchsorted
+    # probe; the n_tombstones check above already collected it
+    del_ids = np.unique(np.fromiter(index.deleted_ids, dtype=np.int64))
     affected_shards = [
         r["shard"]
         for r in ts.select(doc_shard(n_shards).alias("shard")).distinct().collect()
@@ -349,7 +347,7 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     # (if it is already a patched snapshot) applied so dead runs are
     # neither re-patched nor resurrected
     parts = [
-        spark.read.parquet(p).withColumn("_seg", F.lit(ref))
+        spark.read.schema(INDEX_SCHEMA).parquet(p).withColumn("_seg", F.lit(ref))
         for ref, p in zip(seg_refs, index.segment_paths("term_postings"))
     ]
     tagged = parts[0]
@@ -386,7 +384,7 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     if n_runs:
         rows = decode_runs(hits).join(ts, "doc_id", "left_anti")
         write_runs(rows, out_abs, n_shards)
-        seg = spark.read.parquet(f"{out_abs}/term_postings")
+        seg = spark.read.schema(INDEX_SCHEMA).parquet(f"{out_abs}/term_postings")
         written = seg.agg(
             F.sum("df_shard").alias("p"), F.sum("n_bytes").alias("b")
         ).collect()[0]

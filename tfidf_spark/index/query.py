@@ -1,11 +1,25 @@
 """BM25 top-k query over the compressed sharded index.
 
+Two places answer queries, with one kernel:
+
+- the **query coordinator** (the driver, ``_coordinator_topk``) serves
+  single local queries (``bm25_query_terms_local``, ``bm25_query_terms``)
+  and collected batches (``bm25_query_index(prune_by_collect=True)``):
+  the terms' runs come to the driver still encoded (from the warm run
+  cache, else one pruned scan) and the kernel runs per query, as the
+  reference ranks in-process over its relational index (SURVEY.md §2.5);
+- the **executor kernel** (``_executor_topk``) serves the join path
+  (``prune_by_collect=False``) and any query or batch whose terms' Σ df
+  exceeds the coordinator's ``DF_BUDGET``: a broadcast postings join, a
+  (query_id, shard) repartition through a mapInPandas kernel, a
+  tombstone anti-join and a rank window.
+
 Scoring contract: every score is bit-identical to
 ``tfidf_spark.oracle.OracleIndex.bm25_topk``, so ties break score-desc
 -> doc_id-asc exactly (SURVEY.md §2.5-W1). One kernel entry,
-``_topk(runs, terms, k)``, decides the score on every query path (the
-driver-local path on its collected runs, the batch paths once per
-(query, shard) slice) with one fold, ``_score``: per distinct term a
+``_topk(runs, terms, k)``, decides the score on every query path (on
+the coordinator per query, on the executors once per (query, shard)
+slice) with one fold, ``_score``: per distinct term a
 column starting at 0.0 gathers ``idf * w`` from that term's runs, with
 ``idf = math.log(n_docs / df)`` (``_idf``); the columns are then added
 left to right in query-term *occurrence* order, repeats included.
@@ -28,7 +42,7 @@ with an absolute, not a relative, error), before bound comparisons: a
 document tied with the kth is never pruned.
 
 Shards hold disjoint doc sets, so per-shard top-k union ⊇ global top-k and
-the final window merge is exact. Hot (stop-like) terms therefore never
+the executor path's final window merge is exact. Hot (stop-like) terms therefore never
 serialize through one task — the index keeps them sharded.
 """
 
@@ -39,6 +53,7 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -47,6 +62,13 @@ from tfidf_spark.index.builder import RUN_COLUMNS, IndexHandle, arrow_runs, sort
 from tfidf_spark.index.codec import BLOCK_SIZE, decode_block, decode_postings
 
 _KERNEL_SCHEMA = "query_id long, k int, doc_id long, score double"
+_QUERY_SCHEMA = "query_id long, terms array<string>, k int"
+_RESULT_SCHEMA = "query_id long, doc_id long, score double, rank int"
+
+# Σ df (postings) of a query's or a collected batch's distinct terms up
+# to which the coordinator answers it on the driver; past it the
+# executor kernel does
+DF_BUDGET = 2_000_000
 
 # Decode accounting, meaningful when the kernel runs in-process (the
 # local fast path / tests): bytes actually varint-decoded vs the bytes an
@@ -274,59 +296,85 @@ def _topk_stream(batches, n_docs: int):
             yield _topk_slice(pdf.iloc[lo:hi], n_docs)
 
 
-def bm25_query_index(
-    index: IndexHandle,
-    queries: DataFrame,
-    prune_by_collect: bool = True,
-    known_terms: list[str] | None = None,
-) -> DataFrame:
-    """Batch BM25 over the index.
-
-    queries: ``(query_id long, terms array<string>, k int)``.
-    Returns ``(query_id, doc_id, score, rank)``, rank 1..k per query,
-    ordered by the deterministic tie-break.
-
-    ``prune_by_collect``: collect the query rows driver-side and push an
-    IN-filter on their distinct terms into the index scan. The filter
-    drops non-matching runs before the join, but parquet min/max stats
-    prune (almost) no row group: runs are stored in ``xxhash64(term)``
-    order (builder.write_runs).
-    ``False`` keeps the batch distributed (no collect, no IN-filter), but
-    the (query, term) table is still BROADCAST into the postings join,
-    so a batch too large to collect is also shipped whole to every
-    executor.
-    """
-    spark = queries.sparkSession
-    # One row per (query, distinct term); the query's whole ``terms``
-    # array rides along, so the kernel folds per occurrence in query
-    # order. prune_by_collect=True already commits to collecting the
-    # batch's distinct terms driver-side, so the batch is
-    # driver-manageable by contract — collect the query ROWS instead
-    # (one plain scan job, no shuffle) and build qterms and the original
-    # k as literal local relations. Distributed batches
-    # (prune_by_collect=False) keep the general plan.
-    if prune_by_collect:
-        qrows = [
-            (int(r["query_id"]), int(r["k"]), list(r["terms"] or []))
-            for r in queries.collect()
-        ]
-        qterms = spark.createDataFrame(
-            [(q, k, ts, t) for q, k, ts in qrows for t in dict.fromkeys(ts)],
-            "query_id long, k int, terms array<string>, term string",
-        )
-        orig_k = spark.createDataFrame(
-            [(q, k) for q, k, _ in qrows], "query_id long, k_orig int"
-        )
+def _coordinator_topk(
+    index: IndexHandle, qrows: list[tuple[int, int, list[str]]], df_budget: int
+) -> list[list[tuple[int, float]]] | None:
+    """Top-k of every ``(query_id, k, terms)`` row on the query
+    coordinator (the driver): one ``[(doc_id, score), ...]`` per row in
+    rank order, or None when Σ df of the rows' distinct terms exceeds
+    ``df_budget`` — a stop-like term's runs grow with the corpus, and the
+    caller then hands the batch to the executor kernel. Each query runs
+    ``_topk`` with ``k`` raised by the tombstone count, then drops
+    tombstoned ids; a term's ``_Run`` objects (and the blocks they
+    decode) are shared by every query of the batch."""
+    distinct = sorted({t for _, k, terms in qrows if k > 0 for t in terms})
+    if not distinct:
+        return [[] for _ in qrows]
+    df_dict = index._df_dict
+    if df_dict is not None:
+        # warmed handle: the budget precheck costs no Spark job and
+        # vocabulary misses short-circuit with zero jobs
+        total_df = sum(df_dict.get(t, 0) for t in distinct)
     else:
-        qterms = queries.select(
-            "query_id", "k", "terms", F.explode(F.array_distinct("terms")).alias("term")
+        # a plain select: an aggregate collect runs 2 jobs under AQE
+        total_df = sum(
+            r["df"]
+            for r in index.term_stats.filter(F.col("term").isin(distinct))
+            .select("df")
+            .collect()
         )
-        orig_k = queries.select("query_id", F.col("k").alias("k_orig"))
+    if total_df > df_budget:
+        return None
+    if total_df == 0:
+        return [[] for _ in qrows]
+    runs_of = index._run_cache
+    if runs_of is None:
+        runs_of = arrow_runs(
+            index.term_postings.filter(F.col("term").isin(distinct))
+            .select(*RUN_COLUMNS)
+            .toArrow()
+        )
+    runs_of_term = {}
+    for t in distinct:
+        found = runs_of.get(t, ())
+        if found:
+            idf = _idf(index.n_docs, sum(run[0] for run in found))
+            runs_of_term[t] = [_Run(t, idf, *run[1:]) for run in found]
+    deleted = index.deleted_ids
+    out = []
+    for _, k, terms in qrows:
+        runs = [r for t in sorted(set(terms)) for r in runs_of_term.get(t, ())]
+        if k <= 0 or not runs:
+            out.append([])
+            continue
+        ids, scores = _topk(runs, list(terms), k + len(deleted))
+        hits = [(int(d), float(s)) for d, s in zip(ids, scores) if int(d) not in deleted]
+        out.append(hits[:k])
+    return out
+
+
+def _executor_topk(
+    index: IndexHandle, queries: DataFrame, terms: list[str] | None = None
+) -> DataFrame:
+    """The executor kernel over a query DataFrame ``(query_id, terms,
+    k)`` -> ``(query_id, doc_id, score, rank)``: the (query, term) table
+    is broadcast into the postings join, rows are hash-partitioned by
+    (query_id, shard) through the mapInPandas MaxScore kernel, tombstones
+    are anti-joined and a window merges the per-shard top-k. ``terms``,
+    when the caller collected the batch's distinct terms, is pushed as an
+    IN-filter into the index scan; parquet min/max stats prune (almost)
+    no row group, since runs are stored in ``xxhash64(term)`` order
+    (builder.write_runs)."""
+    # One row per (query, distinct term); the query's whole ``terms``
+    # array rides along, so the kernel folds per occurrence in query order.
+    qterms = queries.select(
+        "query_id", "k", "terms", F.explode(F.array_distinct("terms")).alias("term")
+    )
+    orig_k = queries.select("query_id", F.col("k").alias("k_orig"))
     # Tombstoned docs are filtered AFTER the kernel; each per-shard top-k
     # over-fetches by the UNAPPLIED tombstone count so the final top-k
     # never under-fills (tombstones already physically applied by
     # patch_deletes cannot surface, so they need no headroom).
-    n_ts = index.n_tombstones
     n_unapplied = index.n_unapplied_tombstones
     if n_unapplied:
         qterms = qterms.withColumn(
@@ -335,15 +383,7 @@ def bm25_query_index(
 
     tp = index.term_postings
     ts = index.term_stats
-    if prune_by_collect:
-        if known_terms is not None:
-            terms = sorted(set(known_terms))
-        else:
-            terms = sorted({t for _, _, q_terms in qrows for t in q_terms})
-        if not terms:
-            return spark.createDataFrame(
-                [], "query_id long, doc_id long, score double, rank int"
-            )
+    if terms is not None:
         tp = tp.filter(F.col("term").isin(terms))
         ts = ts.filter(F.col("term").isin(terms))
 
@@ -361,7 +401,7 @@ def bm25_query_index(
         .sortWithinPartitions("query_id", "shard", "term")
         .mapInPandas(lambda batches: _topk_stream(batches, n_docs), _KERNEL_SCHEMA)
     )
-    if n_ts:
+    if index.n_tombstones:
         per_shard = per_shard.join(
             F.broadcast(index.tombstones), "doc_id", "left_anti"
         )
@@ -374,29 +414,80 @@ def bm25_query_index(
     )
 
 
+def _local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` as a DataFrame over a local relation: built from an Arrow
+    table it is a ``LocalTableScan``, empty or not, whose collect runs no
+    Spark job (~40 ms to create and collect two rows, local[2]); one
+    built from a Python list (or an empty pandas frame) is an RDD scan
+    and runs one."""
+    names = [f.split()[0] for f in schema.split(",")]
+    cols = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(pa.table([list(c) for c in cols], names=names), schema)
+
+
+def bm25_query_index(
+    index: IndexHandle, queries: DataFrame, prune_by_collect: bool = True
+) -> DataFrame:
+    """Batch BM25 over the index.
+
+    queries: ``(query_id long, terms array<string>, k int)``.
+    Returns ``(query_id, doc_id, score, rank)``, rank 1..k per query,
+    ordered by the deterministic tie-break.
+
+    ``prune_by_collect=True`` (the collected batch) collects the query
+    rows to the driver — the batch fits there by contract — and the
+    coordinator answers it (``_coordinator_topk``: the same code as
+    ``bm25_query_terms_local``); the result is a local relation. When Σ
+    df of the batch's distinct terms exceeds ``DF_BUDGET`` the executor
+    kernel answers instead, with an IN-filter on those terms pushed into
+    the index scan.
+    ``prune_by_collect=False`` (the join path) keeps the batch
+    distributed: no collect, no IN-filter, the executor kernel. The
+    (query, term) table is still BROADCAST into the postings join, so a
+    batch too large to collect is also shipped whole to every executor.
+    """
+    if not prune_by_collect:
+        return _executor_topk(index, queries)
+    qrows = [
+        (int(r["query_id"]), int(r["k"]), list(r["terms"] or []))
+        for r in queries.collect()
+    ]
+    got = _coordinator_topk(index, qrows, DF_BUDGET)
+    if got is None:
+        return _executor_topk(
+            index, queries, sorted({t for _, _, terms in qrows for t in terms})
+        )
+    return _local_frame(
+        queries.sparkSession,
+        [
+            (q, d, s, rank)
+            for (q, _, _), hits in zip(qrows, got)
+            for rank, (d, s) in enumerate(hits, 1)
+        ],
+        _RESULT_SCHEMA,
+    )
+
+
 def bm25_query_terms(
     index: IndexHandle, terms: list[str], k: int = 10
 ) -> DataFrame:
-    """Single ad-hoc query -> ``(doc_id, score)`` ordered, limit k."""
-    spark = index.spark
-    q = spark.createDataFrame(
-        [(0, terms, k)], "query_id long, terms array<string>, k int"
-    )
-    return (
-        bm25_query_index(index, q, known_terms=terms)
-        .select("doc_id", "score")
-        .orderBy("rank")
+    """Single ad-hoc query -> ``(doc_id, score)`` ordered, limit k: a
+    local relation over ``bm25_query_terms_local``'s answer."""
+    return _local_frame(
+        index.spark, bm25_query_terms_local(index, terms, k), "doc_id long, score double"
     )
 
 
 def bm25_query_terms_local(
-    index: IndexHandle, terms: list[str], k: int = 10, df_budget: int = 2_000_000
+    index: IndexHandle, terms: list[str], k: int = 10, df_budget: int = DF_BUDGET
 ) -> list[tuple[int, float]]:
-    """Low-latency single-query path: the query's (term, shard) runs come
-    to the driver still encoded (a few compressed blobs) and the kernel
-    runs locally — no shuffle, no window, no Python-worker round trip.
-    This is the query-coordinator pattern a serving tier uses; the
-    distributed path (bm25_query_terms) is for query BATCHES. Exact same
+    """Low-latency single-query path, the coordinator's batch of one:
+    the query's (term, shard) runs come to the driver still encoded (a
+    few compressed blobs) and the kernel runs locally — no shuffle, no
+    window, no Python-worker round trip. This is the query-coordinator
+    pattern a serving tier uses; the same code answers collected batches
+    (``bm25_query_index(prune_by_collect=True)``), and the executor
+    kernel serves the join path and over-budget batches. Exact same
     scores: shards are disjoint doc sets, so feeding each run to the
     kernel double-counts nothing, and df(term) = Σ df_shard of the runs.
 
@@ -411,47 +502,12 @@ def bm25_query_terms_local(
     proportional to the corpus, and collecting it would OOM the driver at
     10^12 files. The terms' df is looked up FIRST (in the warm dictionary,
     else one tiny pruned term_stats scan); if Σ df exceeds the budget the
-    query is delegated to the distributed kernel (``bm25_query_index``),
-    which returns identical results — the executors decode, the driver
-    only sees k rows.
+    query goes to the executor kernel, which returns identical results —
+    the executors decode, the driver only sees k rows.
     """
-    if not terms or k <= 0:
-        return []
-    distinct = sorted(set(terms))
-    df_dict = index._df_dict
-    if df_dict is not None:
-        # warmed handle: the budget precheck costs no Spark job and
-        # vocabulary misses short-circuit with zero jobs
-        total_df = sum(df_dict.get(t, 0) for t in distinct)
-        if total_df == 0:
-            return []
-    else:
-        total_df = (
-            index.term_stats.filter(F.col("term").isin(distinct))
-            .agg(F.sum("df").alias("s"))
-            .collect()[0]["s"]
-            or 0
-        )
-    if total_df > df_budget:
-        out = bm25_query_terms(index, terms, k=k).collect()
-        return [(int(r["doc_id"]), float(r["score"])) for r in out]
-    runs_of = index._run_cache
-    if runs_of is None:
-        runs_of = arrow_runs(
-            index.term_postings.filter(F.col("term").isin(distinct))
-            .select(*RUN_COLUMNS)
-            .toArrow()
-        )
-    found = [(t, run) for t in distinct for run in runs_of.get(t, ())]
-    if not found:
-        return []
-    df_total: Counter[str] = Counter()
-    for t, run in found:
-        df_total[t] += run[0]
-    deleted = index.deleted_ids
-    runs = [_Run(t, _idf(index.n_docs, df_total[t]), *run[1:]) for t, run in found]
-    ids, scores = _topk(runs, list(terms), k + len(deleted))
-    result = [
-        (int(d), float(s)) for d, s in zip(ids, scores) if int(d) not in deleted
-    ]
-    return result[:k]
+    got = _coordinator_topk(index, [(0, k, list(terms))], df_budget)
+    if got is not None:
+        return got[0]
+    q = index.spark.createDataFrame([(0, list(terms), k)], _QUERY_SCHEMA)
+    out = _executor_topk(index, q, sorted(set(terms))).orderBy("rank").collect()
+    return [(int(r["doc_id"]), float(r["score"])) for r in out]
